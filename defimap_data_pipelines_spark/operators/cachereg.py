@@ -1,67 +1,87 @@
-"""Bounded DataFrame-cache registry.
+"""The session-owned shared-frame store.
 
-Operators that return a LAZY frame over a ``.cache()``-ed scan
-(containment_pairs' shingle frame, group_centroid_similarity's
-centroid frame) must keep the cache alive past the call — but a
-caller invoking the operator in a loop would otherwise accumulate
-pinned frames until memory pressure. The registry keeps at most
-``bound`` live caches per registry (oldest-first unpersist: an
-already-collected result loses nothing; a still-lazy one silently
-recomputes, never goes wrong) and ``release()`` gives eager callers
-a targeted handle that doesn't nuke unrelated caches the way
-``spark.catalog.clearCache()`` does.
+Frames that outlive the call that built them live in one small ordered
+map stored on the ``SparkSession`` itself: ``@shared_frame`` builders'
+frames, keyed by (builder name, input dir), and ``pin``-ned ``.cache()``
+scans behind operators' lazy results. A dropped session takes its
+frames with it. Past ``_BOUND`` frames the oldest is unpersisted; a
+still-lazy result over it recomputes, never goes wrong.
 
-Thread-safe (r10 ADVICE): registry mutations are lock-guarded so
-concurrent driver threads (e.g. a thread-pooled backfill calling the
-operator per shard) can't race append/pop into an over-bound registry
-or a double-unpersist. ``unpersist`` itself runs OUTSIDE the lock —
-it can block on the JVM and needs no registry state.
-
-First landed for containment_pairs in r10
-(reference parity anchor: /root/reference behavior is cache-free —
-this is a Spark-execution-model concern with no reference analogue);
-generalized here in r11 so group_centroid_similarity's cross-side
-cache gets the same semantics (r10 verdict task 3).
+The store adds no Spark action: each builder keeps its own persistence.
+Its lock is never held during a build, because builders nest and
+concurrent callers may race on one key; the first insert wins.
 """
 
 from __future__ import annotations
 
+import functools
+import logging
 import threading
+import time
+from collections import OrderedDict
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+# One input dir's 14 keyed frames plus the pins of one query (at most a
+# few) must never evict each other; 32 leaves room for both.
+_BOUND = 32
+
+_ATTR = "_shared_frames"
+_LOCK = threading.Lock()
+_log = logging.getLogger(__name__)
 
 
-class BoundedCacheRegistry:
-    """Keeps at most ``bound`` cached frames; evicts oldest-first."""
+def _put(spark: SparkSession, key: object, df: DataFrame) -> DataFrame:
+    """Hold ``df`` under ``key`` unless a frame is already there; return
+    the held one."""
+    with _LOCK:
+        frames = spark.__dict__.setdefault(_ATTR, OrderedDict())
+        held = frames.setdefault(key, df)
+        evicted = []
+        while len(frames) > _BOUND:
+            evicted.append(frames.popitem(last=False)[1])
+    # a race loser over the same plan shares the winner's cache entry,
+    # which unpersisting it would drop
+    if held is not df and not held.sameSemantics(df):
+        evicted.append(df)
+    for old in evicted:
+        old.unpersist(blocking=False)
+    return held
 
-    def __init__(self, bound: int = 4) -> None:
-        self.bound = bound
-        self._lock = threading.Lock()
-        self._frames: list[DataFrame] = []
 
-    def register(self, df: DataFrame) -> DataFrame:
-        """Track ``df`` (already ``.cache()``-ed); evict past bound."""
-        with self._lock:
-            self._frames.append(df)
-            evicted: list[DataFrame] = []
-            while len(self._frames) > self.bound:
-                evicted.append(self._frames.pop(0))
-        for old in evicted:
-            old.unpersist(blocking=False)
-        return df
+def shared_frame(build):
+    """Decorate a ``(spark, sf_dir) -> DataFrame`` builder so each
+    session builds its frame once per ``sf_dir``."""
 
-    def release(self) -> int:
-        """Unpersist every held cache; returns how many were released.
-        Each REGISTRY ENTRY is popped exactly once; registering the
-        same DataFrame object twice yields two entries and two
-        unpersist calls (harmless — Spark unpersist is idempotent)."""
-        with self._lock:
-            drained = list(self._frames)
-            self._frames.clear()
-        for cached in drained:
-            cached.unpersist(blocking=False)
-        return len(drained)
+    @functools.wraps(build)
+    def get(spark: SparkSession, sf_dir: str) -> DataFrame:
+        key = (build.__name__, sf_dir)
+        with _LOCK:
+            hit = spark.__dict__.get(_ATTR, {}).get(key)
+        if hit is not None:
+            return hit
+        t0 = time.perf_counter()
+        df = build(spark, sf_dir)
+        # a lazy .cache() frame materializes in its first consumer, so
+        # its build_s is plan construction only
+        rec = {"frame": build.__name__, "sf_dir": sf_dir,
+               "build_s": time.perf_counter() - t0, "lazy": df.is_cached}
+        _log.debug("shared frame %(frame)s built from %(sf_dir)s in "
+                   "%(build_s).3f s (lazy=%(lazy)s)", rec, extra=rec)
+        return _put(spark, key, df)
 
-    def __len__(self) -> int:
-        with self._lock:
-            return len(self._frames)
+    return get
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Keep a ``.cache()``-ed ``df`` alive in its session's store."""
+    return _put(df.sparkSession, object(), df)
+
+
+def release(spark: SparkSession) -> int:
+    """Unpersist every frame ``spark`` holds; return how many."""
+    with _LOCK:
+        frames = spark.__dict__.pop(_ATTR, {})
+    for df in frames.values():
+        df.unpersist(blocking=False)
+    return len(frames)

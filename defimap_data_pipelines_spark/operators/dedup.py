@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.functions.text import fingerprint, word_shingles
-from defimap_data_pipelines_spark.operators.cachereg import BoundedCacheRegistry
+from defimap_data_pipelines_spark.operators.cachereg import pin
 
 
 class BitsetVocabGateExceeded(ValueError):
@@ -566,10 +566,10 @@ def simhash_near_pairs(
     whole explode + xxhash64 + 64-sum subtree executes once per side
     (r12 optimization: the before-plan shows the full Generate +
     two-phase HashAggregate twice — caching the O(docs)-row
-    (doc_id, simhash) frame halves the heavy work; bounded via the
-    shared shingle-cache registry, the containment_pairs idiom).
+    (doc_id, simhash) frame halves the heavy work; pinned in the
+    session's bounded store, the containment_pairs idiom).
     """
-    sigs = _register_shingle_cache(simhash64(docs, text_col).cache())
+    sigs = pin(simhash64(docs, text_col).cache())
     blocked = sigs.select(
         "doc_id",
         "simhash",
@@ -646,13 +646,13 @@ def simhash_md5_pairs(
     four 15-bit chunks, so the blocked join has full recall and the
     bit_count verify makes the result identical to all-pairs.
 
-    The signature frame feeds BOTH self-join sides; cached (bounded
-    registry, the containment_pairs idiom) so the explode + md5 +
-    60-sum signature subtree runs once instead of once per side —
+    The signature frame feeds BOTH self-join sides; cached (pinned in
+    the session's bounded store, the containment_pairs idiom) so the
+    explode + md5 + 60-sum signature subtree runs once, not per side —
     md5 SimHash is ~3x the per-token cost of the xxhash64 path, so
     the recompute was the dominant share of this operator's time.
     """
-    sigs = _register_shingle_cache(simhash_md5(docs, text_col).cache())
+    sigs = pin(simhash_md5(docs, text_col).cache())
     blocked = sigs.select(
         "doc_id",
         "simhash",
@@ -746,7 +746,7 @@ def line_dedup(
     # frame feeds BOTH the corpus-frequency groupBy and the dup-marking
     # join — uncached, the split + posexplode subtree (and its parquet
     # scan) executed once per consumer
-    lines = _register_shingle_cache(
+    lines = pin(
         docs.select(
             "doc_id",
             F.posexplode(line_arr).alias("pos", "line"),
@@ -824,10 +824,10 @@ def substring_dedup(
     # and ``wins`` — the expensive per-token slice+array_join window
     # build — feeds BOTH the corpus-frequency groupBy and the
     # frequent-start semi-join
-    toks = _register_shingle_cache(
+    toks = pin(
         docs.select("doc_id", ts.alias("_ts")).cache()
     )
-    wins = _register_shingle_cache(
+    wins = pin(
         toks.select(
             "doc_id",
             F.posexplode(
@@ -878,27 +878,6 @@ def substring_dedup(
     )
 
 
-# Shingle-frame cache registry (r9 verdict task 6, thread-safety +
-# shared implementation r10 ADVICE / r11). containment_pairs returns
-# a LAZY frame over a cached shingle scan, so the cache must outlive
-# the call — the BoundedCacheRegistry (operators/cachereg.py) keeps
-# at most _SHINGLE_CACHE_BOUND live under loop callers and is safe
-# under concurrent driver threads.
-_SHINGLE_CACHE_BOUND = 4
-_shingle_registry = BoundedCacheRegistry(_SHINGLE_CACHE_BOUND)
-
-
-def _register_shingle_cache(df: DataFrame) -> DataFrame:
-    return _shingle_registry.register(df)
-
-
-def release_shingle_caches() -> int:
-    """Unpersist every registry-held shingle cache; returns how many
-    were released. Call after collecting results when running
-    containment_pairs in a loop."""
-    return _shingle_registry.release()
-
-
 def containment_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -939,13 +918,9 @@ def containment_pairs(
     # per-doc array frame (pre-explode, so O(docs) rows) or the
     # whole upstream scan executes once per consumer (r8 containment
     # adjudication: the double scan was ~40% of wall time at sf0.1).
-    # The cache outlives the call (the result is lazy) but is BOUNDED:
-    # the module registry unpersists oldest-first past
-    # _SHINGLE_CACHE_BOUND, and release_shingle_caches() gives
-    # loop-callers eager cleanup (r9 verdict task 6).
-    hs = _register_shingle_cache(
-        hashed_shingles(doc_shingles(docs, text_col, n)).cache()
-    )
+    # The cache outlives the call (the result is lazy), so it is pinned
+    # in the session's bounded store (operators/cachereg.py).
+    hs = pin(hashed_shingles(doc_shingles(docs, text_col, n)).cache())
     post = hs.select(
         "doc_id", F.size("_hh").alias("ns"), F.explode("_hh").alias("h")
     )

@@ -29,39 +29,7 @@ from defimap_data_pipelines_spark.functions.vector import (
     cosine_from_norms,
     l2_norm,
 )
-from defimap_data_pipelines_spark.operators.cachereg import BoundedCacheRegistry
-
-# Centroid-frame cache registry (r10 verdict task 3 — the symmetry
-# candidate to containment_pairs' shingle registry, deferred from r10
-# so it lands with same-round window slots for its drifted
-# dependents). group_centroid_similarity returns a LAZY frame over a
-# cached centroid aggregation consumed by norms AND both pair sides;
-# the registry bounds loop callers to _CENTROID_CACHE_BOUND live
-# caches and release_centroid_caches() gives eager cleanup.
-_CENTROID_CACHE_BOUND = 4
-_centroid_registry = BoundedCacheRegistry(_CENTROID_CACHE_BOUND)
-
-
-def release_centroid_caches() -> int:
-    """Unpersist every registry-held centroid cache; returns how many
-    were released. Call after collecting results when running
-    group_centroid_similarity in a loop."""
-    return _centroid_registry.release()
-
-
-# LSH signature-frame cache registry (r12 optimization): each
-# cosine_pairs_lsh call caches ONE (id, vec, norm, buckets) frame
-# consumed by both self-join sides; bounded so loop callers cannot
-# accumulate unbounded storage memory.
-_LSH_SIG_CACHE_BOUND = 4
-_lsh_sig_registry = BoundedCacheRegistry(_LSH_SIG_CACHE_BOUND)
-
-
-def release_lsh_sig_caches() -> int:
-    """Unpersist every registry-held LSH signature cache; returns how
-    many were released. Call after collecting results when running
-    cosine_pairs_lsh in a loop."""
-    return _lsh_sig_registry.release()
+from defimap_data_pipelines_spark.operators.cachereg import pin
 
 
 def cosine_topk(
@@ -315,16 +283,17 @@ def cosine_pairs_lsh(
     # once more for the upstream lineage when that is itself a union/
     # transform pipeline). Cache the compact un-exploded (id, vec,
     # norm, buckets) frame — |V| rows, ~dim+2 doubles + num_tables
-    # structs per row — and explode per side from memory. Bounded for
-    # loop callers via the module registry (oldest-first unpersist;
-    # an evicted still-lazy frame silently recomputes).
-    sigs = vectors.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
-        buckets.alias("_tb"),
-    ).cache()
-    sigs = _lsh_sig_registry.register(sigs)
+    # structs per row — and explode per side from memory. Pinned in
+    # the session's bounded store (an evicted still-lazy frame
+    # silently recomputes).
+    sigs = pin(
+        vectors.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).alias("_v"),
+            l2_norm(F.col(vec_col)).alias("_n"),
+            buckets.alias("_tb"),
+        ).cache()
+    )
 
     def bucketed(out_id: str) -> DataFrame:
         return sigs.select(
@@ -779,7 +748,8 @@ def semdedup_prune(
         # per (cluster, sub) group computes every pairwise dot as a
         # fused multiply-add. The cap bounds group size, so per-task
         # state is ~cap x dim; a pathological oversized bucket streams
-        # in 4096-row tiles (O(n^2) work either way, bounded memory).
+        # in 4096-row tiles (O(n^2) work either way; memory is linear
+        # in the group size: the n x dim matrix plus a 4096 x n block).
         # Exactness: dots and norms accumulate one DIMENSION at a
         # time (acc += outer(m[:, d], m[:, d])) — the same
         # left-to-right fp64 addition order as the JVM aggregate
@@ -798,11 +768,13 @@ def semdedup_prune(
 
         def _gram_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
             n = len(pdf)
+            # output ids keep the input columns' dtypes (int32 in, int32 out)
+            cdt, vdt = pdf["cluster"].dtype, pdf["vec_id"].dtype
             empty = pd.DataFrame(
                 {
-                    "cluster": pd.Series(dtype="int64"),
-                    "a_id": pd.Series(dtype="int64"),
-                    "b_id": pd.Series(dtype="int64"),
+                    "cluster": pd.Series(dtype=cdt),
+                    "a_id": pd.Series(dtype=vdt),
+                    "b_id": pd.Series(dtype=vdt),
                     "cosine": pd.Series(dtype="float64"),
                 }
             )
@@ -841,7 +813,7 @@ def semdedup_prune(
             return pd.DataFrame(
                 {
                     "cluster": np.full(
-                        sum(x.size for x in out_a), clu, dtype="int64"
+                        sum(x.size for x in out_a), clu, dtype=cdt
                     ),
                     "a_id": np.concatenate(out_a),
                     "b_id": np.concatenate(out_b),
@@ -935,12 +907,12 @@ def group_centroid_similarity(
             # aggregate, no extra scan
             F.count(F.lit(1)).cast("long").alias("_cnt"),
         )
-        # consumed by norms AND both pair sides; BOUNDED under loop
-        # callers via the module registry (oldest-first unpersist —
-        # an evicted still-lazy result silently recomputes)
+        # consumed by norms AND both pair sides; pinned in the
+        # session's bounded store (an evicted still-lazy result
+        # silently recomputes)
         .cache()
     )
-    cent = _centroid_registry.register(cent)
+    pin(cent)
     norms = cent.groupBy("g").agg(
         F.sum(F.col("cq") * F.col("cq")).alias("nrm"),
         F.max("_cnt").alias("_gn"),

@@ -23,11 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.config import INITIAL_PRINCIPAL
+from defimap_data_pipelines_spark.operators.cachereg import pin, shared_frame
 from defimap_data_pipelines_spark.operators.growth import growth_of_10k
 from defimap_data_pipelines_spark.operators.tvl import tvl
 from defimap_data_pipelines_spark.plans.domain import (
     RAW_SERIES_SQL,
-    note_shared_frame,
     orders_raw_series,
 )
 from defimap_data_pipelines_spark.sources.parquet import read_table
@@ -40,26 +40,6 @@ DS = "2001-08-01"
 
 QUERIES: dict[str, SparkQuery] = {}
 ORACLE: dict[str, str] = {}
-
-# Bounded registry for per-invocation plan-level caches (r13, ADVICE):
-# oldest-first eviction past the bound, so repeated invocations of a
-# query that caches an intermediate (e.g. fifo_matching's projected
-# lineitem) cannot pin unbounded storage memory in one session.
-from defimap_data_pipelines_spark.operators.cachereg import (  # noqa: E402
-    BoundedCacheRegistry as _BoundedCacheRegistry,
-)
-
-_PLAN_CACHE_REGISTRY = _BoundedCacheRegistry(4)
-
-
-def _plan_cache_register(df: DataFrame) -> DataFrame:
-    return _PLAN_CACHE_REGISTRY.register(df)
-
-
-def release_plan_caches() -> int:
-    """Unpersist every registry-held plan cache; returns the count."""
-    return _PLAN_CACHE_REGISTRY.release()
-
 
 def register(name: str, oracle: str | None = None):
     def deco(fn: SparkQuery) -> SparkQuery:
@@ -275,20 +255,12 @@ def trailing_sql(ds: str) -> str:
 TRAILING_SQL = trailing_sql(DS)
 
 
-# (session id, sf_dir) -> cached trailing frame; trailing_return,
-# return_1y, and risk all consume it
-_TRAILING_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# trailing_return, return_1y, and risk all consume this frame
+@shared_frame
 def _trailing_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     from defimap_data_pipelines_spark.operators.trailing import trailing_returns
 
-    key = (id(spark), sf_dir)
-    hit = _TRAILING_CACHE.get(key)
-    if hit is None:
-        hit = trailing_returns(orders_raw_series(spark, sf_dir), DS).cache()
-        _TRAILING_CACHE[key] = hit
-    return hit
+    return trailing_returns(orders_raw_series(spark, sf_dir), DS).cache()
 
 
 @register("trailing_return", TRAILING_SQL)
@@ -1259,38 +1231,24 @@ JACCARD_SQL = f"""
 """
 
 
-_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_HASHED_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@shared_frame
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (doc_id, _sh) frame shared by jaccard + minhash."""
     from defimap_data_pipelines_spark.operators.dedup import doc_shingles
 
-    key = (id(spark), sf_dir)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is None:
-        hit = doc_shingles(read_table(spark, sf_dir, "documents")).cache()
-        _SHINGLE_CACHE[key] = hit
-    return hit
+    return doc_shingles(read_table(spark, sf_dir, "documents")).cache()
 
 
+@shared_frame
 def _hashed_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (doc_id, _hh) sorted-hash frame shared by jaccard-family
     candidate generation and verification."""
     from defimap_data_pipelines_spark.operators.dedup import hashed_shingles
 
-    key = (id(spark), sf_dir)
-    hit = _HASHED_SHINGLE_CACHE.get(key)
-    if hit is None:
-        hit = hashed_shingles(_doc_shingles(spark, sf_dir)).cache()
-        _HASHED_SHINGLE_CACHE[key] = hit
-    return hit
+    return hashed_shingles(_doc_shingles(spark, sf_dir)).cache()
 
 
-_NEARDUP_LABEL_CACHE: dict = {}
-
-
+@shared_frame
 def _neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (doc_id, component) labels over the t=0.35 exact-Jaccard
     pair graph — the SAME cross-query sharing as the hashed-shingle
@@ -1305,18 +1263,13 @@ def _neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    key = (id(spark), sf_dir)
-    hit = _NEARDUP_LABEL_CACHE.get(key)
-    if hit is None:
-        pairs = ngram_jaccard_pairs(
-            read_table(spark, sf_dir, "documents"),
-            threshold=0.35,
-            shingles=_doc_shingles(spark, sf_dir),
-            hashed=_hashed_doc_shingles(spark, sf_dir),
-        ).select("doc_a", "doc_b")
-        hit = connected_components(pairs, "doc_a", "doc_b").cache()
-        _NEARDUP_LABEL_CACHE[key] = hit
-    return hit
+    pairs = ngram_jaccard_pairs(
+        read_table(spark, sf_dir, "documents"),
+        threshold=0.35,
+        shingles=_doc_shingles(spark, sf_dir),
+        hashed=_hashed_doc_shingles(spark, sf_dir),
+    ).select("doc_a", "doc_b")
+    return connected_components(pairs, "doc_a", "doc_b").cache()
 
 
 @register("ngram_jaccard_pairs", JACCARD_SQL)
@@ -1361,49 +1314,26 @@ COSINE_TOPK_SQL = f"""
 """
 
 
-# (session id, sf_dir) -> cached exact / LSH top-5 frames for the 10
-# benchmark query vectors. cosine_topk, lsh_topk and ann_recall_eval
-# consume the IDENTICAL (query_id, vec_id, cosine) relations —
-# ann_recall_eval previously re-ran both the brute-force corpus pass
-# and the full LSH bucket join that the standalone queries had just
-# computed (the _SERIES_CACHE idiom; r13, guide §2.4/§5). Each frame
-# is 50 rows.
-_COSINE_TOPK10_CACHE: dict[tuple[int, str], DataFrame] = {}
-_LSH_TOPK10_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# Shared exact / LSH top-5 frames for the 10 benchmark query vectors.
+# cosine_topk, lsh_topk and ann_recall_eval consume the IDENTICAL
+# (query_id, vec_id, cosine) relations — ann_recall_eval previously
+# re-ran both the brute-force corpus pass and the full LSH bucket join
+# that the standalone queries had just computed (r13, guide §2.4/§5).
+# Each frame is 50 rows.
+@shared_frame
 def _cosine_topk10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from defimap_data_pipelines_spark.operators.similarity import cosine_topk
 
-    key = (id(spark), sf_dir)
-    hit = _COSINE_TOPK10_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
     emb = read_table(spark, sf_dir, "embeddings")
-    hit = cosine_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).cache()
-    _COSINE_TOPK10_CACHE[key] = hit
-    note_shared_frame("cosine_topk10", t0)
-    return hit
+    return cosine_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).cache()
 
 
+@shared_frame
 def _lsh_topk10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from defimap_data_pipelines_spark.operators.similarity import lsh_topk
 
-    key = (id(spark), sf_dir)
-    hit = _LSH_TOPK10_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
     emb = read_table(spark, sf_dir, "embeddings")
-    hit = lsh_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).cache()
-    _LSH_TOPK10_CACHE[key] = hit
-    note_shared_frame("lsh_topk10", t0)
-    return hit
+    return lsh_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).cache()
 
 
 @register("cosine_topk", COSINE_TOPK_SQL)
@@ -1556,9 +1486,7 @@ def q_allpairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- rows-only entries (not SQL-expressible: engine-native hashing) ----
 
 
-_MINHASH_PAIR_CACHE: dict = {}
-
-
+@shared_frame
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached FULL-CORPUS verified minhash pair frame at the curation
     threshold (0.35): minhash_lsh_dedup, clean_corpus, curation_report
@@ -1570,17 +1498,12 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_candidates,
     )
 
-    key = (id(spark), sf_dir)
-    hit = _MINHASH_PAIR_CACHE.get(key)
-    if hit is None:
-        hit = minhash_lsh_candidates(
-            read_table(spark, sf_dir, "documents"),
-            threshold=0.35,
-            shingles=_doc_shingles(spark, sf_dir),
-            hashed=_hashed_doc_shingles(spark, sf_dir),
-        ).cache()
-        _MINHASH_PAIR_CACHE[key] = hit
-    return hit
+    return minhash_lsh_candidates(
+        read_table(spark, sf_dir, "documents"),
+        threshold=0.35,
+        shingles=_doc_shingles(spark, sf_dir),
+        hashed=_hashed_doc_shingles(spark, sf_dir),
+    ).cache()
 
 
 @register("minhash_lsh_dedup", JACCARD_SQL)
@@ -2580,39 +2503,27 @@ def _clean_corpus_ctes() -> str:
     """
 
 
-# (session id, sf_dir) -> cached curation-survivor frame at the
-# standing curation params (min_quality=0.3, t=0.35, minhash pairing
-# over the session pair frame). clean_corpus and training_dataset run
-# the IDENTICAL curation; uncached, each invocation re-ran the
-# quality filter + exact-dedup window + survivor pair semi-joins AND
-# the eagerly-checkpointed connected-components contraction (~2 s of
+# Shared curation-survivor frame at the standing curation params
+# (min_quality=0.3, t=0.35, minhash pairing over the session pair
+# frame). clean_corpus and training_dataset run the IDENTICAL
+# curation; uncached, each invocation re-ran the quality filter +
+# exact-dedup window + survivor pair semi-joins AND the
+# eagerly-checkpointed connected-components contraction (~2 s of
 # driver-visible construction per call at sf0.1) — one cached
-# materialization now serves both consumers and repeat runs (the
-# _SERIES_CACHE idiom; r13, guide §2.4/§5). At 100 TB this frame is
-# the persisted silver table every curation pipeline materializes.
-_CLEAN_SURVIVORS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# materialization now serves both consumers and repeat runs (r13,
+# guide §2.4/§5). At 100 TB this frame is the persisted silver table
+# every curation pipeline materializes.
+@shared_frame
 def _clean_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from defimap_data_pipelines_spark.operators.corpus import clean_corpus
 
-    key = (id(spark), sf_dir)
-    hit = _CLEAN_SURVIVORS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
-    hit = clean_corpus(
+    return clean_corpus(
         read_table(spark, sf_dir, "documents"),
         min_quality=0.3,
         jaccard_threshold=0.35,
         use_minhash=True,
         pairs_full=_minhash_pairs(spark, sf_dir),
     ).cache()
-    _CLEAN_SURVIVORS_CACHE[key] = hit
-    note_shared_frame("clean_survivors", t0)
-    return hit
 
 
 @register("clean_corpus", _clean_corpus_sql())
@@ -3857,9 +3768,7 @@ KMEANS_SQL = f"""
 """
 
 
-_KMEANS_FIT_CACHE: dict = {}
-
-
+@shared_frame
 def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached 2-round k=8 Lloyd fit over the embeddings (vec_id, e,
     cluster, dist) — kmeans_clusters and semdedup_prune consume the
@@ -3867,19 +3776,9 @@ def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs once per session."""
     from defimap_data_pipelines_spark.operators.clustering import kmeans_fit
 
-    import time
-
-    key = (id(spark), sf_dir)
-    hit = _KMEANS_FIT_CACHE.get(key)
-    if hit is None:
-        t0 = time.perf_counter()
-        hit = kmeans_fit(
-            read_table(spark, sf_dir, "embeddings"), k=8, iters=2,
-            keep_vec=True,
-        ).cache()
-        _KMEANS_FIT_CACHE[key] = hit
-        note_shared_frame("kmeans_assigned", t0)
-    return hit
+    return kmeans_fit(
+        read_table(spark, sf_dir, "embeddings"), k=8, iters=2, keep_vec=True
+    ).cache()
 
 
 @register("kmeans_clusters", KMEANS_SQL)
@@ -3949,18 +3848,13 @@ IVF_TRAINED_SQL = f"""
 """
 
 
-# (session id, sf_dir) -> cached one-Lloyd-round IVF codebook (K=8
-# rows). ivf_topk_trained and ivf_topk_persisted train the IDENTICAL
-# codebook from the identical init, and each call previously re-ran
-# the init sort+limit collect plus the assign/update aggregation —
-# one cached fit now serves both consumers and both bench runs (the
-# _SERIES_CACHE idiom; r13, guide §2.4/§5).
-_IVF_CODEBOOK_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# Shared one-Lloyd-round IVF codebook (K=8 rows). ivf_topk_trained and
+# ivf_topk_persisted train the IDENTICAL codebook from the identical
+# init, and each call previously re-ran the init sort+limit collect
+# plus the assign/update aggregation — one cached fit now serves both
+# consumers and both bench runs (r13, guide §2.4/§5).
+@shared_frame
 def _ivf_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
     from pyspark.sql import Window
 
     from defimap_data_pipelines_spark.operators.clustering import (
@@ -3968,11 +3862,6 @@ def _ivf_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_centroids,
     )
 
-    key = (id(spark), sf_dir)
-    hit = _IVF_CODEBOOK_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
     emb = read_table(spark, sf_dir, "embeddings")
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
@@ -3987,10 +3876,7 @@ def _ivf_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e").alias("c"),
         )
     )
-    trained = update_centroids(assign_clusters(v, init)).cache()
-    _IVF_CODEBOOK_CACHE[key] = trained
-    note_shared_frame("ivf_trained_codebook", t0)
-    return trained
+    return update_centroids(assign_clusters(v, init)).cache()
 
 
 @register("ivf_topk_trained", IVF_TRAINED_SQL)
@@ -8388,23 +8274,14 @@ def _label_prop_sql(rounds: int = 2) -> str:
     )
 
 
-# (session id, sf_dir) -> cached symmetrized customer<->supplier
-# purchase edge frame. label_propagation, pagerank_top20 and
-# khop_reach consume the IDENTICAL frame, and each one's self-union
-# used to execute the orders x lineitem join + distinct twice — one
-# cached materialization now serves every consumer branch of every
-# consumer query (the _SERIES_CACHE idiom; r12 optimization).
-_PURCHASE_SYM_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# Shared symmetrized customer<->supplier purchase edge frame.
+# label_propagation, pagerank_top20 and khop_reach consume the
+# IDENTICAL frame, and each one's self-union used to execute the
+# orders x lineitem join + distinct twice — one materialization now
+# serves every consumer branch of every consumer query (r12
+# optimization).
+@shared_frame
 def _purchase_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
-    key = (id(spark), sf_dir)
-    hit = _PURCHASE_SYM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -8423,12 +8300,9 @@ def _purchase_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blocks are strictly cheaper to re-read than the columnar
     # compressed cache (measured: pagerank 9.3 s via cache() vs the
     # checkpointed form; see OPTIMIZATION_r12.md)
-    sym = e.unionByName(
+    return e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint()
-    _PURCHASE_SYM_CACHE[key] = sym
-    note_shared_frame("purchase_sym_edges", t0)
-    return sym
 
 
 @register("label_propagation", _label_prop_sql())
@@ -9096,24 +8970,15 @@ _COPURCHASE_ED_SQL = """
 """
 
 
-_COPURCHASE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@shared_frame
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (u < v) part co-purchase edge frame.
 
-    Session-cached (the _SERIES_CACHE idiom): triangle_count and
+    A shared frame: triangle_count and
     kcore_rounds consume the identical frame, and kcore's self-union
     reads it twice — uncached, the lineitem self-join + distinct
     (the most expensive edge build in the registry) executed once per
     consumer branch (r12 optimization)."""
-    import time
-
-    key = (id(spark), sf_dir)
-    hit = _COPURCHASE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -9123,16 +8988,13 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v")
     )
-    out = (
+    return (
         a.join(b, "ok")
         .filter(F.col("u") < F.col("v"))
         .select("u", "v")
         .distinct()
         .localCheckpoint()
     )
-    _COPURCHASE_CACHE[key] = out
-    note_shared_frame("copurchase_edges", t0)
-    return out
 
 
 TRIANGLE_SQL = f"""
@@ -9833,24 +9695,15 @@ _REPEAT_COPURCHASE_ED_SQL = """
 """
 
 
-_REPEAT_COPURCHASE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@shared_frame
 def _repeat_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Support-thresholded co-purchase edges, session-cached (the
-    _SERIES_CACHE idiom): ra_linkpred, graph_walks,
+    """Support-thresholded co-purchase edges, a shared frame:
+    ra_linkpred, graph_walks,
     community_modularity and local_clustering all consume the
     identical frame, and several read it through self-unions /
     multi-branch plans — one cached materialization of the lineitem
     self-join + support groupBy serves every consumer
     (r12 optimization)."""
-    import time
-
-    key = (id(spark), sf_dir)
-    hit = _REPEAT_COPURCHASE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    t0 = time.perf_counter()
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -9860,7 +9713,7 @@ def _repeat_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v")
     )
-    out = (
+    return (
         a.join(b, "ok")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
@@ -9869,9 +9722,6 @@ def _repeat_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
         .localCheckpoint()
     )
-    _REPEAT_COPURCHASE_CACHE[key] = out
-    note_shared_frame("repeat_copurchase_edges", t0)
-    return out
 
 
 RA_LINKPRED_SQL = f"""
@@ -13428,10 +13278,10 @@ def q_fifo_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache: buys and sells each feed TWO consumers (the fifo match
     # windows and their per-key qty rollups), so the projected
     # lineitem scan executed four times per action (r12; the plan
-    # audit showed scans=4). Routed through the bounded plan-cache
-    # registry (r13, ADVICE): a bare .cache() pinned a fresh frame
-    # per invocation indefinitely under loop/bench callers.
-    li = _plan_cache_register(
+    # audit showed scans=4). Pinned in the session's bounded store
+    # (r13, ADVICE): a bare .cache() pinned a fresh frame per
+    # invocation indefinitely under loop/bench callers.
+    li = pin(
         read_table(spark, sf_dir, "lineitem").select(
             "l_partkey",
             "l_quantity",

@@ -18,7 +18,6 @@ def get_spark(
     app_name: str = "defimap-data-pipelines-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 

@@ -108,12 +108,10 @@ SLOW_TESTS = {
 }
 
 
-_SLOW_BASENAMES = {n.split("/")[-1] for n in SLOW_TESTS}
-
 
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        nid = item.nodeid.replace("\\", "/")
-        base = nid.split("/")[-1]  # "test_file.py::test_name[param]"
-        if base in _SLOW_BASENAMES:
+        # full repo-relative node id: two files sharing a base name in
+        # different directories must not mark each other's tests slow
+        if item.nodeid.replace("\\", "/") in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

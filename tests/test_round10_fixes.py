@@ -1,8 +1,10 @@
 """Round-10 verdict/ADVICE fixes pinned as tests.
 
 1. containment_pairs' shingle cache is BOUNDED under loop callers
-   (r9 verdict task 6): the module registry unpersists oldest-first
-   past the bound and release_shingle_caches() gives eager cleanup.
+   (r9 verdict task 6): each call pins exactly one frame in the
+   session's bounded store (the bound itself is proven with fake
+   frames in tests/test_round11_fixes.py) and release(spark) gives
+   eager cleanup.
 2. kcore_decompose's single-JVM localCheckpoint ceiling is a guard,
    not a crash (r9 verdict task 7): past the edge budget in local
    mode it raises LocalCheckpointCeiling with the remedy.
@@ -16,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.operators import dedup
+from defimap_data_pipelines_spark.operators.cachereg import release
 from defimap_data_pipelines_spark.operators.graph import (
     KCORE_LOCAL_EDGE_CEILING,
     LocalCheckpointCeiling,
@@ -36,31 +39,29 @@ def _docs(spark, tag: str):
 
 
 def test_containment_cache_bounded_in_loops(spark):
-    dedup.release_shingle_caches()  # isolate from earlier tests
+    release(spark)  # isolate from earlier tests
     base = _persistent_rdd_count(spark)
-    loops = dedup._SHINGLE_CACHE_BOUND + 3
+    loops = 3
     for i in range(loops):
         dedup.containment_pairs(_docs(spark, f"v{i}"), "text", 3, 1).collect()
+        assert len(spark._shared_frames) == i + 1  # one pin per call
     grown = _persistent_rdd_count(spark) - base
-    assert grown <= dedup._SHINGLE_CACHE_BOUND, (
+    assert grown <= loops, (
         f"{loops} loop calls left {grown} pinned shingle caches"
     )
-    assert len(dedup._shingle_registry) == dedup._SHINGLE_CACHE_BOUND
-    released = dedup.release_shingle_caches()
-    assert released == dedup._SHINGLE_CACHE_BOUND
-    assert len(dedup._shingle_registry) == 0
+    assert release(spark) == loops
+    assert release(spark) == 0  # idempotent
 
 
 def test_containment_result_correct_after_eviction(spark):
-    """An evicted cache silently recomputes — a result held lazily
-    across later calls still collects correctly."""
-    dedup.release_shingle_caches()
+    """A released cache silently recomputes — a result held lazily
+    past its pin's release still collects correctly."""
+    release(spark)
     lazy = dedup.containment_pairs(_docs(spark, "first"), "text", 3, 1)
-    for i in range(dedup._SHINGLE_CACHE_BOUND + 1):  # evict "first"
-        dedup.containment_pairs(_docs(spark, f"later{i}"), "text", 3, 1)
+    assert release(spark) == 1  # unpersists "first"'s shingle cache
     rows = lazy.collect()
     assert rows and all(r["cont_bp"] >= 1 for r in rows)
-    dedup.release_shingle_caches()
+    release(spark)
 
 
 def _edges(spark, n: int):

@@ -2,12 +2,13 @@
 
 1. group_centroid_similarity's cross-side centroid cache is BOUNDED
    under loop callers (r10 verdict task 3 — the symmetry candidate to
-   containment_pairs' shingle registry) and release_centroid_caches()
-   gives eager cleanup.
-2. BoundedCacheRegistry (the shared implementation both registries
-   now use) holds its bound and single-unpersist guarantee under
-   concurrent driver threads (r10 ADVICE: the old module-global list
-   raced append/pop).
+   containment_pairs' shingle cache): each call pins exactly one
+   frame in the session's store and release(spark) gives eager
+   cleanup.
+2. The shared-frame store (operators/cachereg.py, which every pin and
+   shared frame uses) holds its bound and single-unpersist guarantee
+   under concurrent driver threads (r10 ADVICE: the old module-global
+   list raced append/pop).
 3. kcore_decompose's single-JVM guard exempts "local-cluster[...]"
    masters, whose checkpoint blocks spread across separate executor
    JVMs (r10 ADVICE).
@@ -18,16 +19,15 @@
 
 from __future__ import annotations
 
+import sys
 import threading
 
 import pytest
 
-from defimap_data_pipelines_spark.operators import similarity
-from defimap_data_pipelines_spark.operators.cachereg import BoundedCacheRegistry
+from defimap_data_pipelines_spark.operators.cachereg import _BOUND, pin, release
 from defimap_data_pipelines_spark.operators.graph import _is_single_jvm_master
 from defimap_data_pipelines_spark.operators.similarity import (
     group_centroid_similarity,
-    release_centroid_caches,
 )
 
 
@@ -44,38 +44,41 @@ def _emb(spark, tag: int):
 
 
 def test_centroid_cache_bounded_in_loops(spark):
-    release_centroid_caches()  # isolate from earlier tests
+    release(spark)  # isolate from earlier tests
     base = _persistent_rdd_count(spark)
-    loops = similarity._CENTROID_CACHE_BOUND + 3
+    loops = 3
     for i in range(loops):
         group_centroid_similarity(_emb(spark, i), "grp", "embedding").collect()
+        assert len(spark._shared_frames) == i + 1  # one pin per call
     grown = _persistent_rdd_count(spark) - base
-    assert grown <= similarity._CENTROID_CACHE_BOUND, (
+    assert grown <= loops, (
         f"{loops} loop calls left {grown} pinned centroid caches"
     )
-    assert len(similarity._centroid_registry) == similarity._CENTROID_CACHE_BOUND
-    released = release_centroid_caches()
-    assert released == similarity._CENTROID_CACHE_BOUND
-    assert len(similarity._centroid_registry) == 0
+    assert release(spark) == loops
+    assert release(spark) == 0  # idempotent
 
 
 def test_centroid_result_correct_after_eviction(spark):
-    """An evicted cache silently recomputes — a result held lazily
-    across later calls still collects correctly."""
-    release_centroid_caches()
+    """A released cache silently recomputes — a result held lazily
+    past its pin's release still collects correctly."""
+    release(spark)
     lazy = group_centroid_similarity(_emb(spark, 0), "grp", "embedding")
-    for i in range(similarity._CENTROID_CACHE_BOUND + 1):  # evict it
-        group_centroid_similarity(_emb(spark, i + 1), "grp", "embedding")
+    assert release(spark) == 1  # unpersists its centroid cache
     rows = lazy.collect()
     assert len(rows) == 3  # 3 groups -> 3 unordered pairs
     assert all(r["g_a"] < r["g_b"] and r["cosine"] is not None for r in rows)
-    release_centroid_caches()
+    release(spark)
+
+
+class _FakeSession:
+    """Stands in for a SparkSession: only carries the store."""
 
 
 class _FakeFrame:
     """Stands in for a cached DataFrame: counts unpersist calls."""
 
-    def __init__(self) -> None:
+    def __init__(self, session: _FakeSession) -> None:
+        self.sparkSession = session
         self.unpersists = 0
         self._lock = threading.Lock()
 
@@ -84,15 +87,27 @@ class _FakeFrame:
             self.unpersists += 1
 
 
+def test_store_evicts_oldest_first_past_bound():
+    session = _FakeSession()
+    frames = [_FakeFrame(session) for _ in range(_BOUND + 3)]
+    for f in frames:
+        assert pin(f) is f
+    assert [f.unpersists for f in frames[:3]] == [1, 1, 1]
+    assert all(f.unpersists == 0 for f in frames[3:])
+    assert list(session._shared_frames.values()) == frames[3:]
+    assert release(session) == _BOUND
+    assert all(f.unpersists == 1 for f in frames)
+
+
 def test_registry_bound_and_single_unpersist_under_threads():
-    reg = BoundedCacheRegistry(bound=4)
-    frames = [_FakeFrame() for _ in range(200)]
+    session = _FakeSession()
+    frames = [_FakeFrame(session) for _ in range(200)]
     errors: list[BaseException] = []
 
     def worker(chunk):
         try:
             for f in chunk:
-                reg.register(f)
+                pin(f)
         except BaseException as e:  # pragma: no cover
             errors.append(e)
 
@@ -100,20 +115,27 @@ def test_registry_bound_and_single_unpersist_under_threads():
         threading.Thread(target=worker, args=(frames[i::8],))
         for i in range(8)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # force interleavings inside pin()
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
     assert not errors
-    assert len(reg) == 4  # bound holds even under contention
-    released = reg.release()
-    assert released == 4
-    assert len(reg) == 0
+    # bound holds even under contention
+    assert len(session._shared_frames) == _BOUND
+    released = release(session)
+    assert released == _BOUND
+    assert not hasattr(session, "_shared_frames")
     # every frame unpersisted at most once; exactly 200 total
-    # unpersists (196 evictions + 4 releases), none double
+    # unpersists (200 - _BOUND evictions + _BOUND releases), none double
     assert all(f.unpersists <= 1 for f in frames)
     assert sum(f.unpersists for f in frames) == len(frames)
-    assert reg.release() == 0  # idempotent
+    assert release(session) == 0  # idempotent
 
 
 @pytest.mark.parametrize(

@@ -1,16 +1,16 @@
 """r12 optimization: cosine_pairs_lsh computes its plane-projection
 signatures ONCE into a bounded cached frame shared by both self-join
 sides. These tests pin that the cache changes nothing about the
-output and that the registry releases what it registered."""
+output and that the session store releases what it pinned."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from defimap_data_pipelines_spark.operators.cachereg import release
 from defimap_data_pipelines_spark.operators.similarity import (
     cosine_pairs,
     cosine_pairs_lsh,
-    release_lsh_sig_caches,
 )
 
 
@@ -43,10 +43,12 @@ def test_sig_cache_output_matches_exact_verifier(spark):
     assert got <= exact
 
 
-def test_release_lsh_sig_caches_releases_registered(spark):
+def test_release_drains_lsh_sig_pin(spark):
     v = _vectors(spark, n=10)
-    release_lsh_sig_caches()  # drain anything left by other tests
-    cosine_pairs_lsh(v, threshold=0.99, num_planes=6, dim=8).collect()
-    assert release_lsh_sig_caches() >= 1
+    release(spark)  # drain anything left by other tests
+    lazy = cosine_pairs_lsh(v, threshold=0.99, num_planes=6, dim=8)
+    assert release(spark) == 1  # exactly one signature frame pinned
     # idempotent: nothing left to release
-    assert release_lsh_sig_caches() == 0
+    assert release(spark) == 0
+    # the lazy result recomputes its released signatures
+    assert (0, 1000) in {(r["id_a"], r["id_b"]) for r in lazy.collect()}

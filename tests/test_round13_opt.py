@@ -161,25 +161,20 @@ def test_shared_topk_frames_match_operators(spark, sf_dir):
     )
 
 
-def test_plan_cache_registry_releases(spark, sf_dir):
-    from defimap_data_pipelines_spark.plans.queries import (
-        _PLAN_CACHE_REGISTRY,
-        QUERIES,
-        release_plan_caches,
-    )
+def test_fifo_matching_pin_released(spark, sf_dir):
+    from defimap_data_pipelines_spark.operators.cachereg import release
+    from defimap_data_pipelines_spark.plans.queries import QUERIES
 
-    QUERIES["fifo_matching"](spark, sf_dir).count()
-    assert len(_PLAN_CACHE_REGISTRY) >= 1
-    assert release_plan_caches() >= 1
-    assert len(_PLAN_CACHE_REGISTRY) == 0
+    release(spark)
+    lazy = QUERIES["fifo_matching"](spark, sf_dir)
+    n = lazy.count()
+    assert release(spark) == 1  # the projected lineitem pin
+    assert release(spark) == 0
+    assert lazy.count() == n  # recomputes past its released pin
 
 
-def test_semdedup_gram_kernel_matches_join_path(spark):
-    """The r13 dense-regime gram kernel (max_cluster set) must emit
-    the IDENTICAL pruned rows — ids AND rounded cosines — as the
-    expression join path (max_cluster=None) when no cluster exceeds
-    the cap (the regime where the two formulations are defined to
-    coincide)."""
+def _semdedup_both_paths(spark, id_type: str):
+    """(join-path rows, gram-path rows, their dtypes) on planted twins."""
     import random
 
     from defimap_data_pipelines_spark.operators.similarity import (
@@ -196,16 +191,32 @@ def test_semdedup_gram_kernel_matches_join_path(spark):
                 (1000 + i, [x * (1.0 + 0.001 * ((i % 7) - 3)) for x in base])
             )
     emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
+        rows, f"vec_id {id_type}, embedding array<double>"
     )
     kw = dict(k=4, iters=1, tau=0.35)
-    via_join = {
-        tuple(r)
-        for r in semdedup_prune(emb, max_cluster=None, **kw).collect()
-    }
-    via_gram = {
-        tuple(r)
-        for r in semdedup_prune(emb, max_cluster=4096, dim=8, **kw).collect()
-    }
+    join = semdedup_prune(emb, max_cluster=None, **kw)
+    gram = semdedup_prune(emb, max_cluster=4096, dim=8, **kw)
+    return (
+        {tuple(r) for r in join.collect()},
+        {tuple(r) for r in gram.collect()},
+        (join.dtypes, gram.dtypes),
+    )
+
+
+def test_semdedup_gram_kernel_matches_join_path(spark):
+    """The r13 dense-regime gram kernel (max_cluster set) must emit
+    the IDENTICAL pruned rows — ids AND rounded cosines — as the
+    expression join path (max_cluster=None) when no cluster exceeds
+    the cap (the regime where the two formulations are defined to
+    coincide)."""
+    via_join, via_gram, _ = _semdedup_both_paths(spark, "long")
     assert via_gram == via_join
     assert via_gram  # non-vacuous: the planted twins must be pruned
+
+
+def test_semdedup_gram_kernel_int32_ids_match_join_path(spark):
+    """The gram kernel derives its id dtypes from the input columns:
+    int32 vec_ids give the join path's rows and types."""
+    via_join, via_gram, (join_t, gram_t) = _semdedup_both_paths(spark, "int")
+    assert via_gram == via_join and via_gram
+    assert gram_t == join_t and dict(gram_t)["vec_id"] == "int"

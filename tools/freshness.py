@@ -65,7 +65,9 @@ def _iter_refs(fn):
         import textwrap
 
         tree = ast.parse(textwrap.dedent(src))
-    g = getattr(fn, "__globals__", {})
+    # a decorated builder's wrapper carries the decorator module's
+    # globals; its body's names resolve in the wrapped function's
+    g = getattr(inspect.unwrap(fn), "__globals__", {})
     names: set[str] = set()
     attr_refs: set[tuple[str, str]] = set()  # (base name, attribute)
     local_imports: dict[str, object] = {}
