@@ -34,10 +34,6 @@ def ws_tokens(col: Column) -> Column:
     return F.split(normalize_text(col), " ")
 
 
-def ws_token_count(col: Column) -> Column:
-    return F.size(ws_tokens(col))
-
-
 def bpe_ish_token_count(col: Column) -> Column:
     """Count of alpha-runs + digit-runs + single punctuation marks — a
     cheap proxy for BPE token count."""
@@ -47,12 +43,6 @@ def bpe_ish_token_count(col: Column) -> Column:
 def punct_ratio(col: Column) -> Column:
     n_punct = F.length(col) - F.length(F.regexp_replace(col, r"[^\w\s]", ""))
     return F.try_divide(n_punct.cast("double"), F.length(col).cast("double"))
-
-
-def stopword_hits(col: Column, words: list[str]) -> Column:
-    """How many tokens of ``col`` are in ``words`` (normalized)."""
-    toks = ws_tokens(col)
-    return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
 
 
 def stopword_ratio(col: Column, words: list[str] | None = None) -> Column:

@@ -1,7 +1,6 @@
 """DataFrame -> DataFrame operators: the engine's public surface."""
 
 from defimap_data_pipelines_spark.operators.growth import (  # noqa: F401
-    benchmark_gotk,
     growth_of_10k,
     price_gotk,
 )

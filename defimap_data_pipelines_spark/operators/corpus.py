@@ -14,34 +14,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_clusters(
-    pairs: DataFrame, max_iters: int = 20, algorithm: str = "bsp"
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs (doc_a, doc_b) ->
     (doc_id, cluster_id) with cluster_id = min doc_id in the component.
 
-    ``algorithm="bsp"`` (default) is min-label propagation
-    (operators/graph.py::connected_components): O(diameter) rounds,
-    the right default for near-dup graphs (dup clusters are
-    cliques-ish, diameter ~2-4). ``algorithm="star"`` is
-    large-star/small-star contraction (connected_components_star):
-    O(log^2 n) rounds independent of diameter — choose it when the dup
-    graph may contain long similarity chains or huge skewed
-    components.
+    Runs min-label propagation (operators/graph.py::connected_components):
+    O(diameter) rounds, which suits near-dup graphs (dup clusters are
+    cliques-ish, diameter ~2-4). A caller whose dup graph may contain
+    long similarity chains or huge skewed components should call
+    graph.connected_components_star directly: large-star/small-star
+    contraction takes O(log^2 n) rounds independent of diameter.
 
-    NOTE: both variants RAISE RuntimeError when ``max_iters`` is
-    reached without convergence (fail loud rather than return a
-    partial labeling — a silently-wrong cluster_id would drop the
-    wrong documents downstream in clean_corpus/training_dataset). A
-    BSP non-convergence on a legitimate graph means a dup chain longer
-    than max_iters: raise max_iters or switch to "star"."""
-    from defimap_data_pipelines_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    NOTE: RAISES RuntimeError when ``max_iters`` is reached without
+    convergence (fail loud rather than return a partial labeling — a
+    silently-wrong cluster_id would drop the wrong documents downstream
+    in clean_corpus/training_dataset). A non-convergence on a legitimate
+    graph means a dup chain longer than max_iters: raise max_iters or
+    call connected_components_star."""
+    from defimap_data_pipelines_spark.operators.graph import connected_components
 
-    cc = connected_components if algorithm == "bsp" else connected_components_star
-    return cc(pairs, "doc_a", "doc_b", max_iter=max_iters).select(
+    return connected_components(pairs, "doc_a", "doc_b", max_iter=max_iters).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
 

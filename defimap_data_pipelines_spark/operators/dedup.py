@@ -74,13 +74,6 @@ def hashed_shingles(shingles: DataFrame) -> DataFrame:
     )
 
 
-def shingle_postings(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingle) postings with distinct shingles per doc."""
-    return docs.select(
-        "doc_id", F.explode(word_shingles(F.col(text_col), n)).alias("shingle")
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",

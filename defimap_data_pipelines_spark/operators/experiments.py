@@ -253,78 +253,6 @@ def ratio_metric_delta(
     )
 
 
-def quantile_treatment_effect(
-    df: DataFrame,
-    variant_col: str,
-    value_col: str,
-    tie_col: str,
-    control: str,
-    treatment: str,
-    percentiles: tuple = (25, 50, 75, 90),
-    quantum: int = 100,
-) -> DataFrame:
-    """Quantile treatment effects: the treatment-minus-control gap
-    at each requested percentile of the outcome distribution — what
-    a mean lift (did_estimator, ratio_metric_delta) averages away. A
-    treatment that fattens the right tail while hurting the median
-    shows up HERE. Returns one row per percentile (p, q_control,
-    q_treatment, qte).
-
-    Pure order statistics, the var_cvar discipline: per-variant rank
-    over (quantized value, ``tie_col``), pick rank max(1, n*p div
-    100) — every selection is an integer decision, so the replay is
-    engine-exact; the only floats are the three de-scales. One sort
-    per variant; the percentile list is a literal broadcast frame.
-    """
-    from pyspark.sql.window import Window
-
-    vq = F.round(F.col(value_col) * quantum).cast("long")
-    base = df.filter(
-        F.col(variant_col).isin([control, treatment])
-    ).select(
-        F.col(variant_col).alias("variant"),
-        vq.alias("_v"),
-        F.col(tie_col).alias("_tb"),
-    )
-    w = Window.partitionBy("variant").orderBy("_v", "_tb")
-    ranked = base.select(
-        "variant", "_v", F.row_number().over(w).alias("_rn")
-    )
-    n = ranked.groupBy("variant").agg(F.max("_rn").alias("_n"))
-    ps = df.sparkSession.createDataFrame(
-        [(int(p),) for p in percentiles], "p long"
-    )
-    picked = (
-        ranked.join(F.broadcast(n), "variant")
-        .join(F.broadcast(ps))
-        .filter(
-            F.col("_rn")
-            == F.greatest(F.lit(1), F.expr("_n * p div 100"))
-        )
-        .groupBy("p")
-        .agg(
-            F.max(
-                F.when(F.col("variant") == control, F.col("_v"))
-            ).alias("_qc"),
-            F.max(
-                F.when(F.col("variant") == treatment, F.col("_v"))
-            ).alias("_qt"),
-        )
-    )
-    return picked.select(
-        "p",
-        F.round(F.col("_qc").cast("double") / quantum, 9).alias(
-            "q_control"
-        ),
-        F.round(F.col("_qt").cast("double") / quantum, 9).alias(
-            "q_treatment"
-        ),
-        F.round(
-            (F.col("_qt") - F.col("_qc")).cast("double") / quantum, 9
-        ).alias("qte"),
-    ).orderBy("p")
-
-
 def norm_sf2_expr(az: str) -> str:
     """Two-sided normal p-value 2*(1 - Phi(|z|)) as a SQL expression
     string over an already-absolute z expression ``az`` — Abramowitz

@@ -171,18 +171,16 @@ def connected_components_star(
     smaller-or-equal neighbors to the minimum. At the fixed point the
     edge set is a star forest rooted at component minima.
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    uv = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    # nodes come from the endpoints BEFORE the self-loop filter: a node
+    # whose only edge is a self-loop is its own singleton component
     nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
+        uv.select(F.col("u").alias("node"))
+        .unionByName(uv.select(F.col("v").alias("node")))
         .distinct()
         .localCheckpoint()
     )
+    e = uv.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
 
     def large_star(edg: DataFrame) -> DataFrame:
         sym = edg.unionByName(

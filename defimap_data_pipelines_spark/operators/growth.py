@@ -14,12 +14,11 @@ Scale notes:
   across executors. No global-order (single-partition) window exists in
   this module.
 - The AAVE-reward running total (SUM ... ROWS UNBOUNDED PRECEDING,
-  aave_transform.py:107-110) is a cumulative float sum. With
-  ``quantize_rewards=True`` the summand is quantized to integer
-  micro-units so the cumulative sum is exact integer arithmetic —
-  bit-reproducible at any parallelism and across engines (the
-  correctness oracle relies on this). Error bound: 5e-7 per day,
-  linear in days.
+  aave_transform.py:107-110) is a cumulative float sum in the
+  reference. Here each summand is quantized to integer micro-units, so
+  the cumulative sum is exact integer arithmetic, bit-reproducible at
+  any parallelism and across engines (the correctness oracles rely on
+  this). Error bound: 5e-7 per day, linear in days.
 """
 
 from __future__ import annotations
@@ -47,7 +46,6 @@ def growth_of_10k(
     start_date: str | None = None,
     end_date: str | None = None,
     monthly: bool = False,
-    quantize_rewards: bool = True,
 ) -> DataFrame:
     """Compute GOTK from a RAW_SCHEMA frame, per ``name``.
 
@@ -82,11 +80,8 @@ def growth_of_10k(
 
     # running reward accrual (aave_transform.py:107-110)
     contrib = F.col("end_day_capital") * F.col("reward_rate") / F.col("aave_price")
-    if quantize_rewards:
-        q = F.round(contrib * float(QUANT_SCALE)).cast("long")
-        reward = F.sum(q).over(wcum) / float(QUANT_SCALE)
-    else:
-        reward = F.sum(contrib).over(wcum)
+    q = F.round(contrib * float(QUANT_SCALE)).cast("long")
+    reward = F.sum(q).over(wcum) / float(QUANT_SCALE)
     df = df.select(
         "date", "name", reward.alias("end_day_aave_reward"), "end_day_capital", "aave_price"
     )
@@ -169,24 +164,3 @@ def capital_gotk(raw: DataFrame) -> DataFrame:
         (F.col("end_day_investment") / sdi - 1).alias("percent_change"),
     )
 
-
-def benchmark_gotk(
-    strategy_name: str,
-    stable_raw: DataFrame | None = None,
-    volatile_price: DataFrame | None = None,
-    stablecoins: list[str] | None = None,
-) -> DataFrame:
-    """Benchmark selection (aave_transform.py:41-90): stablecoin
-    strategies benchmark against the aave_usdc capital GOTK; volatile
-    strategies against the wbtc price GOTK."""
-    from defimap_data_pipelines_spark.config import STABLECOINS
-
-    stablecoins = stablecoins or STABLECOINS
-    token = strategy_name.split("_")[1] if "_" in strategy_name else strategy_name
-    if token in stablecoins:
-        if stable_raw is None:
-            raise ValueError("stable benchmark requires the aave_usdc raw frame")
-        return capital_gotk(stable_raw)
-    if volatile_price is None:
-        raise ValueError("volatile benchmark requires the wbtc price frame")
-    return price_gotk(volatile_price)

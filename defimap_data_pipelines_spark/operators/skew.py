@@ -181,67 +181,3 @@ def skew_report(
             F.col("_m.k").alias("heaviest_key"),
         )
     )
-
-
-def join_cardinality_estimate(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    sample_buckets: int = 16,
-) -> DataFrame:
-    """Pre-flight join-size estimation — the planner question "how
-    many rows will this join EMIT?" answered two ways: exactly
-    (sum over keys of count_left * count_right, from the two key
-    histograms) and by a deterministic 1/``sample_buckets`` KEY
-    sample scaled back up (md5 bucket 0, the hash_bucket scheme —
-    sampling KEYS not rows keeps each key's full frequency, which is
-    what a join-size estimate needs; row sampling would bias
-    c_l * c_r quadratically). Returns one row (exact_pairs,
-    est_pairs, n_keys, sampled_keys, rel_err). A skew-blind planner
-    reads est_pairs; the gap to exact_pairs is the built-in accuracy
-    audit (one mega-key can carry most of the mass — skew_report
-    territory).
-
-    Cost: two groupBys to key histograms + one join of the
-    HISTOGRAM frames (O(distinct keys), never the raw tables).
-    """
-    from defimap_data_pipelines_spark.operators.sampling import (
-        hash_bucket,
-    )
-
-    ca = left.groupBy(F.col(left_key).alias("k")).agg(
-        F.count(F.lit(1)).cast("long").alias("cl")
-    )
-    cb = right.groupBy(F.col(right_key).alias("k")).agg(
-        F.count(F.lit(1)).cast("long").alias("cr")
-    )
-    j = ca.join(cb, "k").select(
-        "k",
-        (F.col("cl") * F.col("cr")).alias("_p"),
-        (hash_bucket(F.col("k"), sample_buckets) == 0).alias("_in"),
-    )
-    agg = j.agg(
-        F.sum("_p").alias("exact_pairs"),
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum(F.when(F.col("_in"), F.col("_p")).otherwise(F.lit(0))).alias(
-            "_sp"
-        ),
-        F.sum(F.when(F.col("_in"), 1).otherwise(0))
-        .cast("long")
-        .alias("sampled_keys"),
-    )
-    est = F.col("_sp") * sample_buckets
-    return agg.select(
-        "exact_pairs",
-        est.alias("est_pairs"),
-        "n_keys",
-        "sampled_keys",
-        F.round(
-            F.abs(est - F.col("exact_pairs")).cast("double")
-            / F.when(F.col("exact_pairs") > 0, F.col("exact_pairs")).cast(
-                "double"
-            ),
-            9,
-        ).alias("rel_err"),
-    )

@@ -1583,98 +1583,6 @@ def anova_oneway(
     )
 
 
-def ks_pairs(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    quantum: int = 100,
-) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov distance for EVERY ordered pair
-    of groups (a < b by name): D = max_x |F_a(x) - F_b(x)| — the
-    all-pairs distribution-distance matrix behind "which sources
-    actually differ" triage (mannwhitney_pairs compares locations;
-    KS sees shape). Returns (g_a, g_b, n_a, n_b, ks_d).
-
-    Exactness: the CDF difference is compared CROSS-MULTIPLIED —
-    D_q = max |cum_a * n_b - cum_b * n_a| over value blocks, a pure
-    int64 max — and divided by n_a*n_b once at the end, so no
-    per-block float ever exists. Same one-groupBy + pair-tagged
-    block-window shape as mannwhitney_pairs: raw rows are scanned
-    once; the windows run over O(pairs * distinct values).
-    Int64 headroom: cum * n caps at n_a * n_b < 9.2e18 — fine to
-    ~3e9 rows per group.
-    """
-    from pyspark.sql.window import Window
-
-    vq = F.round(F.col(value_col) * quantum).cast("long")
-    counts = (
-        df.groupBy(F.col(group_col).alias("g"), vq.alias("vq"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .cache()  # pair list + tagged join
-    )
-    groups = counts.select("g").distinct()
-    pairs = groups.select(F.col("g").alias("g_a")).join(
-        F.broadcast(groups.select(F.col("g").alias("g_b"))),
-        F.col("g_a") < F.col("g_b"),
-    )
-    tagged = counts.join(
-        F.broadcast(pairs),
-        (F.col("g") == F.col("g_a")) | (F.col("g") == F.col("g_b")),
-    )
-    blocks = tagged.groupBy("g_a", "g_b", "vq").agg(
-        F.sum(
-            F.when(F.col("g") == F.col("g_a"), F.col("cnt")).otherwise(
-                F.lit(0)
-            )
-        ).alias("ca"),
-        F.sum(
-            F.when(F.col("g") == F.col("g_b"), F.col("cnt")).otherwise(
-                F.lit(0)
-            )
-        ).alias("cb"),
-    )
-    w = (
-        Window.partitionBy("g_a", "g_b")
-        .orderBy("vq")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wfull = Window.partitionBy("g_a", "g_b")
-    stepped = blocks.select(
-        "g_a",
-        "g_b",
-        F.sum("ca").over(w).alias("cum_a"),
-        F.sum("cb").over(w).alias("cum_b"),
-    ).select(
-        "g_a",
-        "g_b",
-        "cum_a",
-        "cum_b",
-        F.max("cum_a").over(wfull).alias("_na"),
-        F.max("cum_b").over(wfull).alias("_nb"),
-    )
-    agg = stepped.groupBy("g_a", "g_b").agg(
-        F.max("_na").alias("n_a"),
-        F.max("_nb").alias("n_b"),
-        F.max(
-            F.abs(
-                F.col("cum_a") * F.col("_nb")
-                - F.col("cum_b") * F.col("_na")
-            )
-        ).alias("_dq"),
-    )
-    return agg.select(
-        "g_a",
-        "g_b",
-        "n_a",
-        "n_b",
-        F.round(
-            F.col("_dq").cast("double")
-            / (F.col("n_a") * F.col("n_b")).cast("double"),
-            9,
-        ).alias("ks_d"),
-    ).orderBy("g_a", "g_b")
-
-
 # Shared by the Spark operator and the DuckDB oracle (parity rule:
 # identical expression TEXT -> identical IEEE tree on both engines).
 # Column aliases (runs, n_up, n_down) are fixed by runs_test's output.

@@ -21,11 +21,6 @@ from defimap_data_pipelines_spark.functions.text import (
 )
 
 
-def _hits(text_col: Column, words: list[str]) -> Column:
-    """# tokens (with duplicates) of ``text_col`` in ``words``."""
-    return F.size(F.filter(ws_tokens(text_col), lambda t: t.isin(*words)))
-
-
 def _tok_hits(toks: Column, words: list[str]) -> Column:
     """# elements (with duplicates) of a token array in ``words``."""
     return F.size(F.filter(toks, lambda t: t.isin(*words)))

@@ -32,15 +32,16 @@ def idempotent_replace_range(
 
     Equivalent to BigQuery DELETE-range + WRITE_APPEND, and to Delta's
     ``replaceWhere``, but expressed with vanilla parquet dynamic
-    partition overwrite so it has no library dependency.
+    partition overwrite so it has no library dependency. The mode is a
+    per-write option, so the session conf (and any other thread's full
+    overwrite) is left alone.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def write_jdbc(

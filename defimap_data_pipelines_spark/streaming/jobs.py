@@ -155,18 +155,6 @@ def stream_session_windows(
     )
 
 
-def run_to_memory(stream_df: DataFrame, name: str) -> None:
-    """Drain a streaming frame into an in-memory table (tests)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_user_activity_state(events: DataFrame, timeout_ms: int | None = None):
     """Custom stateful operator via applyInPandasWithState: per-user
     running counters (events seen, value total); with ``timeout_ms`` a

@@ -4,8 +4,9 @@
 oracle SQL + transitive implementation sources, and
 `tools/freshness_manifest.json` records the fingerprint each query
 had at its NEWEST driver-green round (bootstrapped from git history
-at the per-round driver commits; re-stamped each round via
-``python tools/freshness.py update CORRECTNESS_r0N.json N``).
+at the per-round driver commits). After a change that drifts a
+fingerprint, ``python tools/freshness.py restamp <sf_dir> <round>``
+re-stamps only the queries that match their oracle at ``sf_dir``.
 
 This test is the local red the r8 verdict asked for: a query whose
 implementation or oracle changed AFTER its newest driver row must
@@ -70,8 +71,9 @@ def test_no_query_runs_code_newer_than_its_driver_row():
     assert not stale, (
         "queries whose implementation/oracle changed after their "
         f"newest driver-green row, without a window slot: {stale} — "
-        "rotate them into _DRIVER_WINDOW or revert the change "
-        "(tools/freshness.py; see docs/ROUND9_NOTES.md)"
+        "re-validate them with `python tools/freshness.py restamp "
+        "<sf_dir> <round>`, rotate them into _DRIVER_WINDOW or revert "
+        "the change"
     )
 
 

@@ -134,6 +134,60 @@ def test_idempotent_replace_range(spark, bronze, tmp_path):
     assert n1 == n2 == jan.count() + feb.count()
 
 
+def test_idempotent_replace_range_leaves_other_writes_static(
+    spark, tmp_path, monkeypatch
+):
+    """While one thread is inside idempotent_replace_range's write,
+    another thread's full ``mode("overwrite")`` must still replace its
+    whole table: the dynamic mode is scoped to the one write, not set
+    on the shared session conf."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    entered, release = threading.Event(), threading.Event()
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, *args, **kwargs):
+        if threading.current_thread().name == "replace-range":
+            entered.set()
+            assert release.wait(60)
+        return real_parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    other = str(tmp_path / "other")
+    spark.createDataFrame([("old", 1), ("new", 2)], "name string, v int").write.mode(
+        "overwrite"
+    ).partitionBy("name").parquet(other)
+
+    errors = []
+
+    def replace():
+        try:
+            idempotent_replace_range(
+                spark.createDataFrame([("a", 1)], "name string, v int"),
+                str(tmp_path / "ranged"),
+                ["name"],
+            )
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    writer = threading.Thread(target=replace, name="replace-range")
+    writer.start()
+    try:
+        assert entered.wait(60)
+        spark.createDataFrame([("new", 3)], "name string, v int").write.mode(
+            "overwrite"
+        ).partitionBy("name").parquet(other)
+    finally:
+        release.set()
+        writer.join(120)
+    assert not writer.is_alive() and not errors
+    assert [tuple(r) for r in spark.read.parquet(other).collect()] == [(3, "new")]
+    ranged = spark.read.parquet(str(tmp_path / "ranged")).collect()
+    assert [tuple(r) for r in ranged] == [(1, "a")]
+
+
 def test_date_block_dimension_monotone_and_daily(spark):
     from defimap_data_pipelines_spark.pipelines.ingest import (
         date_block_dimension,

@@ -204,8 +204,11 @@ def test_star_cc_matches_bsp_on_fixtures(spark):
         connected_components_star,
     )
 
+    # self-loops: 40 is otherwise isolated (a singleton component),
+    # 2 and 8 also sit inside larger components
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (4, 5), (7, 8), (8, 9), (7, 9), (20, 11), (11, 30)],
+        [(1, 2), (2, 3), (4, 5), (7, 8), (8, 9), (7, 9), (20, 11), (11, 30),
+         (40, 40), (2, 2), (8, 8)],
         ["doc_a", "doc_b"],
     )
     bsp = {

@@ -22,12 +22,14 @@ window-rotation policy into a mechanical check:
   manifest entry while NOT holding a `_DRIVER_WINDOW` slot — the
   local red the r8 verdict asked for.
 
-Round maintenance (run FIRST thing each round, before code changes):
+Re-validation after a change that drifts fingerprints:
 
-    python tools/freshness.py update CORRECTNESS_r0N.json N
+    PYTHONPATH=. python tools/freshness.py restamp <sf_dir> <round>
 
-which re-stamps every green row in that file with the CURRENT
-fingerprint (at round start, HEAD == the state the driver validated).
+recomputes every fingerprint, runs ``tools/parity.compare`` at
+``sf_dir`` on each drifted oracle-backed query, and stamps only the
+ones that match their oracle. It prints every mismatch and exits 1 if
+there is one.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from __future__ import annotations
 import ast
 import hashlib
 import importlib
+import importlib.util
 import inspect
 import json
 import sys
@@ -186,30 +189,52 @@ def load_manifest() -> dict:
     return {}
 
 
-def update_from_correctness(correctness_path: str, round_no: int) -> int:
-    """Stamp every green row in a driver CORRECTNESS file with the
-    current fingerprint. Run at round start, before code changes."""
-    data = json.loads(Path(correctness_path).read_text())
+def restamp(sf_dir: str, round_no: int) -> tuple[list[str], list[str]]:
+    """Re-validate every drifted oracle-backed query against its
+    DuckDB oracle at ``sf_dir`` and stamp the matches with their
+    current fingerprint. Returns (stamped, mismatched)."""
+    spec = importlib.util.spec_from_file_location(
+        "parity", Path(__file__).resolve().parent / "parity.py"
+    )
+    parity = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(parity)
+    from defimap_data_pipelines_spark.session import get_spark
+
     fps = fingerprints()
     manifest = load_manifest()
-    n = 0
-    for name, row in data.items():
-        green = (
-            row.get("rows_match")
-            and row.get("schema_match")
-            and not row.get("err")
-        )
-        if green and name in fps:
+    drifted = [
+        n
+        for n in parity.ORACLE
+        if manifest.get(n, {}).get("fingerprint") != fps[n]
+    ]
+    spark = get_spark("parity")
+    con = parity.duck_connect(sf_dir)
+    stamped, mismatched = [], []
+    for name in drifted:
+        try:
+            ok = parity.compare(name, spark, con, sf_dir)
+        except Exception as e:  # a crashing query is a mismatch
+            print(f"  {name}: ERROR {type(e).__name__}: {e}")
+            ok = False
+        if ok:
             manifest[name] = {"round": round_no, "fingerprint": fps[name]}
-            n += 1
+            stamped.append(name)
+        else:
+            mismatched.append(name)
     MANIFEST.write_text(json.dumps(manifest, indent=1, sort_keys=True) + "\n")
-    return n
+    return stamped, mismatched
 
 
 def main(argv: list[str]) -> int:
-    if len(argv) >= 3 and argv[0] == "update":
-        n = update_from_correctness(argv[1], int(argv[2]))
-        print(f"stamped {n} queries at round {argv[2]}")
+    if len(argv) >= 3 and argv[0] == "restamp":
+        stamped, mismatched = restamp(argv[1], int(argv[2]))
+        print(
+            f"re-validated {len(stamped) + len(mismatched)} drifted queries; "
+            f"stamped {len(stamped)} at round {argv[2]}"
+        )
+        if mismatched:
+            print(f"NOT stamped (oracle mismatch): {mismatched}")
+            return 1
         return 0
     if argv and argv[0] == "print":
         for k, v in sorted(fingerprints().items()):
