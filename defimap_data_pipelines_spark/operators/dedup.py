@@ -307,7 +307,7 @@ def _bitset_jaccard_pairs(
         }
     )
 
-    def _kern(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _kern(key, pdf):
         ba, bb = key
 
         def mat(side: pd.DataFrame):

@@ -127,7 +127,7 @@ def cosine_pairs(
         }
     )
 
-    def _kern(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _kern(key, pdf):
         ba, bb = key
         # a cross-block task can arrive one-sided when the other
         # block holds no vectors (tiny corpora) — no pairs to emit

@@ -36,6 +36,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from defimap_data_pipelines_spark.sources.parquet import dir_tag
+
 
 class ModelStore:
     """Directory of named parquet artifacts (local path or any
@@ -63,6 +65,24 @@ class ModelStore:
 
     def load_frame(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self.path(name))
+
+    def load_frame_if_present(
+        self, spark: SparkSession, name: str
+    ) -> DataFrame | None:
+        """The artifact, or None if nothing is saved under ``name`` yet.
+        Existence is probed with a read attempt (works on any Spark
+        filesystem, unlike os.path), and ONLY a path-not-found failure
+        means "not there yet". Any other load error (corrupt artifact,
+        permissions, transient FS fault) propagates: starting over
+        would mask it and overwrite the existing artifact."""
+        from pyspark.errors import AnalysisException
+
+        try:
+            return self.load_frame(spark, name)
+        except AnalysisException as e:
+            if "PATH_NOT_FOUND" in f"{e.getCondition()} {e}":
+                return None
+            raise
 
     def save_table(self, df: DataFrame, name: str) -> str:
         """Like save_frame but WITHOUT the single-file coalesce — for
@@ -162,29 +182,17 @@ def fit_or_load_frame(
     """Load ``name`` if the artifact exists, else fit and save it —
     the incremental-curation idiom: day 1 pays the training scan,
     every later batch reuses the artifact. ``fit`` is a zero-arg
-    callable returning the frame. Existence is probed with a read
-    attempt (works on any Spark filesystem, unlike os.path) — but ONLY
-    a path-not-found read failure means "not yet fitted". Any other
-    load error (corrupt artifact, permissions, transient FS fault)
-    propagates: silently refitting would mask store misconfiguration
-    and overwrite an existing artifact."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return store.load_frame(spark, name)
-    except AnalysisException as e:
-        cls = e.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cls and "PATH_NOT_FOUND" not in str(e):
-            raise
-        fitted = fit()
-        store.save_frame(fitted, name)
-        return store.load_frame(spark, name)
+    callable returning the frame. Only a missing artifact means "not
+    yet fitted" (``ModelStore.load_frame_if_present``); any other load
+    error propagates rather than refitting over the artifact."""
+    existing = store.load_frame_if_present(spark, name)
+    if existing is not None:
+        return existing
+    store.save_frame(fit(), name)
+    return store.load_frame(spark, name)
 
 
 def default_store_root(tag: str) -> str:
     """Deterministic per-corpus scratch location for driver queries
-    and tests (mirrors plans/queries.py::_stream_dir's tagging)."""
-    import hashlib
-
-    h = hashlib.md5(tag.rstrip("/").encode()).hexdigest()[:10]
-    return os.path.join("/tmp", f"spark_graft_models_{h}")
+    and tests."""
+    return os.path.join("/tmp", f"spark_graft_models_{dir_tag(tag)}")

@@ -30,7 +30,7 @@ from defimap_data_pipelines_spark.plans.domain import (
     RAW_SERIES_SQL,
     orders_raw_series,
 )
-from defimap_data_pipelines_spark.sources.parquet import read_table
+from defimap_data_pipelines_spark.sources.parquet import dir_tag, read_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -5041,11 +5041,8 @@ def _stream_dir(sf_dir: str, table: str) -> str:
     link is re-pointed if dangling or aimed at a different target
     (os.path.exists follows symlinks, so a stale link would otherwise
     silently stream the wrong corpus or crash on recreate)."""
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:10]
     base = os.path.basename(sf_dir.rstrip("/"))
-    link_dir = f"/tmp/spark_stream_{table}_{base}_{tag}"
+    link_dir = f"/tmp/spark_stream_{table}_{base}_{dir_tag(sf_dir)}"
     os.makedirs(link_dir, exist_ok=True)
     link = f"{link_dir}/{table}.parquet"
     target = f"{sf_dir}/{table}.parquet"
@@ -5208,19 +5205,17 @@ def q_stream_sessions_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_MEMO: set[tuple[int, str]] = set()
-
-
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write lineitem/orders as bucketed tables once per (session, sf) —
-    the co-located-layout investment a warehouse makes at ingest so
-    every later fact-fact join is exchange-free."""
+    """Write lineitem/orders as bucketed tables once per catalog and
+    sf_dir — the co-located-layout investment a warehouse makes at
+    ingest so every later fact-fact join is exchange-free. The names
+    carry the full-path digest, so two inputs with the same basename
+    get their own tables."""
     from defimap_data_pipelines_spark.sources.bucketing import write_bucketed
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = dir_tag(sf_dir)
     tbl_l, tbl_o = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
-    key = (id(spark), sf_dir)
-    if key not in _BUCKETED_MEMO:
+    if not (spark.catalog.tableExists(tbl_l) and spark.catalog.tableExists(tbl_o)):
         # a previous PROCESS may have left the managed-table directory
         # behind without this session's catalog knowing the table —
         # saveAsTable then refuses the location; clear stale dirs first
@@ -5250,7 +5245,6 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             16,
             sort_cols=["o_orderkey"],
         )
-        _BUCKETED_MEMO.add(key)
     return tbl_l, tbl_o
 
 

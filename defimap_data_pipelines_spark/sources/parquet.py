@@ -9,6 +9,7 @@ what manual table selection did.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +26,12 @@ TESTDATA_TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+def dir_tag(path: str) -> str:
+    """Ten hex digits of md5 over the FULL path, so two directories
+    with the same basename never share a name derived from them."""
+    return hashlib.md5(path.rstrip("/").encode()).hexdigest()[:10]
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -486,6 +486,8 @@ def stream_cms_incremental(
     The grid is <= depth*width rows, so the previous state is pinned
     with localCheckpoint before its own path is overwritten (same
     read-then-overwrite discipline as stream_curation_incremental).
+    Only a missing grid starts a new sketch; an unreadable one fails
+    the query and is left in place.
     """
     from defimap_data_pipelines_spark.operators.sketches import (
         cms_counters,
@@ -499,11 +501,9 @@ def stream_cms_incremental(
             batch.select(F.col(token_col).alias("token")),
             depth=depth, width=width,
         )
-        try:
-            existing, _, _ = store.load_cms(spark, name)
-            existing = existing.localCheckpoint()
-        except Exception:
-            existing = None
+        existing = store.load_frame_if_present(spark, name)
+        if existing is not None:
+            existing = existing.select("row", "bucket", "c").localCheckpoint()
         store.save_cms(merge_cms(existing, bc), name, depth, width)
 
     return (
@@ -541,24 +541,12 @@ def stream_ams_incremental(
         spark = batch.sparkSession
         if not batch.head(1):
             return
-        from pyspark.errors import AnalysisException
-
         bsums = ams_sign_sums(
             batch.select(F.col(key_col).alias("k")), "k", estimators
         )
-        try:
-            existing = store.load_frame(spark, name).localCheckpoint()
-        except AnalysisException as e:
-            # only "not yet fitted" may fall through; a corrupt or
-            # unreadable store must propagate (the fit_or_load_frame
-            # narrowing, r5 advice)
-            cls = e.getCondition() or ""
-            if (
-                "PATH_NOT_FOUND" not in cls
-                and "PATH_NOT_FOUND" not in str(e)
-            ):
-                raise
-            existing = None
+        existing = store.load_frame_if_present(spark, name)
+        if existing is not None:
+            existing = existing.localCheckpoint()
         merged = (
             bsums
             if existing is None

@@ -3,7 +3,7 @@
 Every top-level function and class in ``defimap_data_pipelines_spark``
 must be named, as a whole word, somewhere outside its own definition:
 in the package (a package ``__init__`` re-export counts), ``tests/``,
-``tools/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``.
+``tools/``, ``perfbench/`` or ``__spark_entry__.py``.
 ``@register``ed queries are exempt: the registry reaches them by name
 string. Pure AST + regex; no Spark session.
 """
@@ -22,7 +22,6 @@ SEARCHED = [
     ROOT / "tests",
     ROOT / "tools",
     ROOT / "perfbench",
-    ROOT / "bench.py",
     ROOT / "__spark_entry__.py",
 ]
 _WORD = re.compile(r"\w+")

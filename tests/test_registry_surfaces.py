@@ -1,12 +1,10 @@
 """Freshness gates for the registry-derived surfaces.
 
-The r6 verdict found two drift bugs the suite did not catch: the
-committed docs/QUERY_INDEX.md said 244 queries while the registry
-held 268, and 92 registered queries had no BENCH_QUERIES entry (one
-of them, markov_attribution, shipped a 39.8 s plan that only the
-driver's bench ever measured). These tests make both drifts a local
-red: every registry change must regenerate the index
-(tools/query_index.py) and land with a bench entry.
+The r6 verdict found that the committed docs/QUERY_INDEX.md said 244
+queries while the registry held 268. These tests make that drift a
+local red: every registry change must regenerate the index
+(tools/query_index.py). Registry-wide timing needs no hand-kept list:
+tools/parity.py times every query in QUERIES as it checks it.
 """
 
 from __future__ import annotations
@@ -223,23 +221,6 @@ def test_operator_moment_products_have_headroom():
     assert not offenders, (
         "operator-side int64 moment products without factor-level "
         f"casts or a '# headroom:' bounded annotation: {offenders}"
-    )
-
-
-def test_every_registered_query_is_benched():
-    import bench
-
-    benched = set(bench.BENCH_QUERIES)
-    missing = sorted(set(QUERIES) - benched)
-    assert not missing, (
-        f"{len(missing)} registered queries have no BENCH_QUERIES "
-        f"entry (first 10: {missing[:10]}) — a registration without "
-        "a bench entry ships unmeasured"
-    )
-    stale = sorted(benched - set(QUERIES))
-    assert not stale, f"bench entries for unregistered queries: {stale}"
-    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES)), (
-        "duplicate names in BENCH_QUERIES"
     )
 
 

@@ -12,9 +12,6 @@
 3. kcore_decompose's single-JVM guard exempts "local-cluster[...]"
    masters, whose checkpoint blocks spread across separate executor
    JVMs (r10 ADVICE).
-4. bench.py's BENCH_ONLY guard fails loudly on empty/unknown name
-   lists instead of IndexError at the warmup (r10 ADVICE, mirroring
-   stress.py's guard).
 """
 
 from __future__ import annotations
@@ -153,17 +150,6 @@ def test_registry_bound_and_single_unpersist_under_threads():
 )
 def test_kcore_guard_master_predicate(master, expected):
     assert _is_single_jvm_master(master) is expected
-
-
-def test_bench_only_guard_raises_before_warmup(monkeypatch):
-    import bench
-
-    monkeypatch.setenv("BENCH_ONLY", "no_such_query,also_missing")
-    with pytest.raises(ValueError, match="no_such_query"):
-        bench.main()
-    monkeypatch.setenv("BENCH_ONLY", ",")
-    with pytest.raises(ValueError, match="no runnable"):
-        bench.main()
 
 
 def test_auto_planes_sizing():

@@ -40,6 +40,32 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS o_bucketed")
 
 
+def test_bucketed_join_agg_keeps_same_basename_inputs_apart(spark, sf_dir, tmp_path):
+    """Two input dirs with the same basename must not share bucketed
+    tables: running A, then B, then A again returns A's rows."""
+    import os
+
+    from defimap_data_pipelines_spark.plans.queries import QUERIES
+    from defimap_data_pipelines_spark.sources.parquet import dir_tag
+
+    other = str(tmp_path / "b" / os.path.basename(sf_dir.rstrip("/")))
+    read_table(spark, sf_dir, "lineitem").withColumn(
+        "l_quantity", F.col("l_quantity") * 2
+    ).write.parquet(f"{other}/lineitem")
+    read_table(spark, sf_dir, "orders").write.parquet(f"{other}/orders")
+    q = QUERIES["bucketed_join_agg"]
+    try:
+        first = sorted(q(spark, sf_dir).collect())
+        b = sorted(q(spark, other).collect())
+        third = sorted(q(spark, sf_dir).collect())
+        assert b != first
+        assert third == first
+    finally:
+        for d in (sf_dir, other):
+            for t in ("lineitem", "orders"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}_bkt_{dir_tag(d)}")
+
+
 def test_partition_pruning(spark, sf_dir, tmp_path):
     from defimap_data_pipelines_spark.plans.domain import orders_raw_series
 

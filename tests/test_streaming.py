@@ -615,6 +615,38 @@ def test_stream_cms_incremental_equals_batch_sketch(spark, sf_dir, tmp_path):
     assert all(ests[t] >= c for t, c in true.items())  # one-sided
 
 
+def test_stream_cms_incremental_keeps_unreadable_store(spark, tmp_path):
+    """Only a MISSING grid means "no sketch yet": a store artifact that
+    exists but is not parquet must fail the query and be left in place,
+    not be restarted from the batch and overwritten."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from defimap_data_pipelines_spark.pipelines.models import ModelStore
+    from defimap_data_pipelines_spark.streaming.jobs import (
+        stream_cms_incremental,
+    )
+
+    arrivals = str(tmp_path / "tokens_arriving")
+    spark.createDataFrame([("a",), ("b",)], "token string").write.parquet(arrivals)
+    store = ModelStore(str(tmp_path / "models"))
+    os.makedirs(store.root)
+    bad = store.path("cms_stream")
+    with open(bad, "wb") as fh:
+        fh.write(b"not a parquet file")
+
+    q = stream_cms_incremental(
+        spark.readStream.schema("token string").parquet(arrivals),
+        store,
+        str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    with open(bad, "rb") as fh:
+        assert fh.read() == b"not a parquet file"
+
+
 def test_stream_decontaminate_matches_batch_probe(spark, sf_dir, tmp_path):
     """Streamed bloom decontamination over 2 micro-batches must keep
     exactly the documents the batch-side probe keeps (zero bloom-hit

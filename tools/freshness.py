@@ -26,8 +26,9 @@ Re-validation after a change that drifts fingerprints:
 
     PYTHONPATH=. python tools/freshness.py restamp <sf_dir> <round>
 
-recomputes every fingerprint, runs ``tools/parity.compare`` at
-``sf_dir`` on each drifted oracle-backed query, and stamps only the
+recomputes every fingerprint, runs the sweep's per-query step
+(``tools/parity.check``) at ``sf_dir`` on each drifted oracle-backed
+query (a query that raises is a mismatch), and stamps only the
 ones that match their oracle. It prints every mismatch and exits 1 if
 there is one.
 """
@@ -211,11 +212,7 @@ def restamp(sf_dir: str, round_no: int) -> tuple[list[str], list[str]]:
     con = parity.duck_connect(sf_dir)
     stamped, mismatched = [], []
     for name in drifted:
-        try:
-            ok = parity.compare(name, spark, con, sf_dir)
-        except Exception as e:  # a crashing query is a mismatch
-            print(f"  {name}: ERROR {type(e).__name__}: {e}")
-            ok = False
+        ok, _ = parity.check(name, spark, con, sf_dir)
         if ok:
             manifest[name] = {"round": round_no, "fingerprint": fps[name]}
             stamped.append(name)

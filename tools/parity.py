@@ -3,14 +3,19 @@
 Runs each registered query on Spark AND its oracle SQL on DuckDB at a
 given SF dir, then compares row count, column names/dtypes, and exact
 values (rows sorted by all columns, columns sorted by name) — mirroring
-the driver's order-insensitive value hash.
+the driver's order-insensitive value hash. Each query runs once; its
+Spark collect is timed and the seconds are printed beside its verdict,
+with their sum on the final line. A query that raises counts as a
+mismatch and the sweep carries on; the exit code is 1 on any mismatch.
 
-Usage: python tools/parity.py [--vanilla] [--window] [sf_dir] [query ...]\n  --window: run exactly the driver's 50-query checked window
+Usage: python tools/parity.py [--vanilla] [--window] [sf_dir] [query ...]
+  --window: run exactly the driver's 50-query checked window
 """
 
 from __future__ import annotations
 
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -124,12 +129,15 @@ def dtype_check(name: str, spark_df, oracle_arrow) -> bool:
     return ok
 
 
-def compare(name: str, spark, con, sf_dir: str) -> bool:
+def timed_compare(name: str, spark, con, sf_dir: str) -> tuple[bool, float]:
+    """(matches its oracle, seconds of the Spark collect)."""
+    t0 = time.perf_counter()
     spark_df = QUERIES[name](spark, sf_dir)
     sdf = spark_df.toPandas()
+    secs = time.perf_counter() - t0
     if name not in ORACLE:
-        print(f"  {name}: rows-only ({len(sdf)} rows) — no oracle")
-        return True
+        print(f"  {name}: rows-only ({len(sdf)} rows, {secs:.2f} s) — no oracle")
+        return True, secs
     oracle_arrow = con.execute(ORACLE[name]).arrow()
     dtypes_ok = dtype_check(name, spark_df, oracle_arrow)
     odf = oracle_arrow.to_pandas()
@@ -137,7 +145,7 @@ def compare(name: str, spark, con, sf_dir: str) -> bool:
     ok = dtypes_ok
     if list(a.columns) != list(b.columns):
         print(f"  {name}: COLUMN MISMATCH spark={list(a.columns)} duck={list(b.columns)}")
-        return False
+        return False, secs
     if len(a) != len(b):
         print(f"  {name}: ROWCOUNT MISMATCH spark={len(a)} duck={len(b)}")
         ok = False
@@ -156,8 +164,22 @@ def compare(name: str, spark, con, sf_dir: str) -> bool:
                     f"  {name}: col '{c}' {bad}/{len(a)} mismatches; "
                     f"first at row {idx}: spark={av[idx]!r} duck={bv[idx]!r}"
                 )
-    print(f"  {name}: {'OK' if ok else 'FAIL'} ({len(a)} rows, {len(a.columns)} cols)")
-    return ok
+    print(f"  {name}: {'OK' if ok else 'FAIL'} ({len(a)} rows, {len(a.columns)} cols, {secs:.2f} s)")
+    return ok, secs
+
+
+def compare(name: str, spark, con, sf_dir: str) -> bool:
+    return timed_compare(name, spark, con, sf_dir)[0]
+
+
+def check(name: str, spark, con, sf_dir: str) -> tuple[bool, float]:
+    """One sweep step: ``timed_compare`` with a raising query counted as
+    a mismatch (0 s), so one failure does not end the sweep."""
+    try:
+        return timed_compare(name, spark, con, sf_dir)
+    except Exception as e:
+        print(f"  {name}: ERROR {type(e).__name__}: {e}")
+        return False, 0.0
 
 
 def vanilla_spark():
@@ -196,9 +218,11 @@ def main() -> int:
         names = argv[1:] or list(QUERIES)
     spark = vanilla_spark() if use_vanilla else get_spark("parity")
     con = duck_connect(sf_dir)
-    fails = [n for n in names if not compare(n, spark, con, sf_dir)]
-    print(f"\n{len(names) - len(fails)}/{len(names)} queries match at {sf_dir}")
-    return 1 if fails else 0
+    results = [check(n, spark, con, sf_dir) for n in names]
+    matched = sum(ok for ok, _ in results)
+    total = sum(secs for _, secs in results)
+    print(f"\n{matched}/{len(names)} queries match at {sf_dir} ({total:.1f} s Spark)")
+    return 0 if matched == len(names) else 1
 
 
 if __name__ == "__main__":

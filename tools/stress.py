@@ -22,8 +22,8 @@ Usage:
   python tools/stress.py run 4 q1_pricing_summary,minhash_lsh_dedup
   (multiplier 1 runs straight off $SPARK_GRAFT_SF_DIR)
 
-Output: one JSON line per (query, mult) plus a final summary line —
-the bench.py tail-survival convention.
+Output: one JSON line per (query, mult) plus a final summary line, so
+a truncated capture still holds every completed measurement.
 """
 
 from __future__ import annotations
