@@ -2,13 +2,8 @@
 
 from defimap_data_pipelines_spark.functions.scalar import (  # noqa: F401
     apr_to_apy,
-    ifnull,
-    money_avg,
-    money_sum,
     nullif_zero,
     quantize,
-    safe_divide,
-    unquantize,
 )
 from defimap_data_pipelines_spark.functions.vector import (  # noqa: F401
     cosine_similarity,

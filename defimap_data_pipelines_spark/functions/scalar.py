@@ -1,9 +1,8 @@
 """Scalar expression helpers.
 
 Maps the reference's BigQuery scalar functions onto Spark expressions
-(SURVEY.md §2.2):
-- IFNULL       (aave_transform.py:47,75,98,138,254) -> coalesce
-- SAFE_DIVIDE  (aave_transform.py:70)               -> try_divide-style
+(SURVEY.md §2.2); IFNULL (aave_transform.py:47,75,98,138,254) and
+SAFE_DIVIDE (:70) are ``F.coalesce`` and ``F.try_divide`` directly:
 - NULLIF(x,0)  (aave_transform.py:255)              -> nullif_zero
 - APR -> APY compounding (aave_extract.py:336-342)
 
@@ -27,16 +26,6 @@ from pyspark.sql import functions as F
 from defimap_data_pipelines_spark.config import QUANT_SCALE
 
 
-def ifnull(col: Column, default) -> Column:
-    """BigQuery IFNULL."""
-    return F.coalesce(col, default if isinstance(default, Column) else F.lit(default))
-
-
-def safe_divide(num: Column, den: Column) -> Column:
-    """BigQuery SAFE_DIVIDE: NULL on division by zero."""
-    return F.try_divide(num, den)
-
-
 def nullif_zero(col: Column) -> Column:
     """NULLIF(col, 0)."""
     return F.when(col == 0, F.lit(None)).otherwise(col)
@@ -51,23 +40,3 @@ def apr_to_apy(apr_percent: Column, periods_per_year: int = 365) -> Column:
 def quantize(col: Column, scale: int = QUANT_SCALE) -> Column:
     """Quantize a double to integer units of 1/scale (exactly summable)."""
     return F.round(col * float(scale)).cast("long")
-
-
-def unquantize(col: Column, scale: int = QUANT_SCALE) -> Column:
-    return col / float(scale)
-
-
-def money_sum(col: Column, cents: int = 100) -> Column:
-    """Exact, order-independent SUM for money-like doubles.
-
-    SUM(round(x*100)::bigint)/100.0 — integer accumulation is exact, so
-    the result is identical regardless of partitioning/merge order.
-    """
-    return F.sum(F.round(col * float(cents)).cast("long")) / float(cents)
-
-
-def money_avg(col: Column, cents: int = 100) -> Column:
-    """Exact-numerator AVG for money-like doubles (see money_sum)."""
-    return F.sum(F.round(col * float(cents)).cast("long")) / (
-        float(cents) * F.count(col)
-    )

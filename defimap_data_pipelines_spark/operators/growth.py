@@ -1,44 +1,140 @@
-"""Growth-of-$10k (GOTK) analytics — the reference's flagship transform.
+"""Growth-of-$10k (GOTK): the reference's flagship transform, and the one
+place its formulas are written.
 
 Semantics: aave_transform.py:93-130 (get_gotk_query) and :133-167
 (get_total_return_query — identical machinery with a calendar-month
 window partition). The two queries differ only in ``PARTITION BY
-FORMAT_DATE('%Y-%m', date)``, so one function with ``monthly=`` covers
-both (SURVEY.md §3.2).
+FORMAT_DATE('%Y-%m', date)``, so ``monthly=`` covers both (SURVEY.md
+§3.2). The reference's benchmark branches (:43-89) and trailing returns
+(:170-216) are copies of the same query.
+
+The formulas, each defined once below and shared by every GOTK consumer
+(``growth_of_10k``, ``capital_gotk``, ``price_gotk``,
+operators/trailing.py and the incremental steps in
+pipelines/incremental.py):
+
+    cap_t  = P / p0 * li_t / li0 * p_t                       capital
+    q_t    = round(cap_t * (apy_t/365/100) / ap_t * SCALE)   reward, bigint
+    edi_t  = (sum q)/SCALE * ap_t + cap_t                    end day
+    sdi_t  = IFNULL(LAG(edi), P);  pc_t = edi_t / sdi_t - 1  start day
+
+Exactness contract: the batch windows and the incremental O(1)-state
+update build these same expression trees, operand for operand, so their
+doubles agree bit for bit (tests/test_incremental.py). Reordering an
+operand here changes every consumer together; the DuckDB oracles in
+plans/queries.py are written independently and catch that.
 
 Scale notes:
-- The reference runs one query per strategy table, giving it implicit
-  per-strategy windows. Here every window is ``partitionBy("name")`` —
-  at 100 TB each strategy's daily series is a few thousand rows, so the
-  window state per partition stays tiny and strategies parallelize
-  across executors. No global-order (single-partition) window exists in
-  this module.
+- Every window is ``partitionBy("name")``: at 100 TB each strategy's
+  daily series is a few thousand rows, so window state stays tiny and
+  strategies parallelize across executors. No global-order window.
 - The AAVE-reward running total (SUM ... ROWS UNBOUNDED PRECEDING,
   aave_transform.py:107-110) is a cumulative float sum in the
   reference. Here each summand is quantized to integer micro-units, so
   the cumulative sum is exact integer arithmetic, bit-reproducible at
-  any parallelism and across engines (the correctness oracles rely on
-  this). Error bound: 5e-7 per day, linear in days.
+  any parallelism and across engines. Error bound: 5e-7 per day,
+  linear in days.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.config import INITIAL_PRINCIPAL, QUANT_SCALE
+from defimap_data_pipelines_spark.functions.scalar import quantize
 
 
-def _month(col: str = "date") -> Column:
-    """FORMAT_DATE('%Y-%m', date) — aave_transform.py:138."""
-    return F.date_format(F.col(col), "yyyy-MM")
-
-
-def _windows(monthly: bool):
-    part = [F.col("name")] + ([_month()] if monthly else [])
+def _windows(monthly: bool = False):
+    """(w, wcum): the per-series window and its running frame; a
+    ``monthly`` series restarts each FORMAT_DATE('%Y-%m', date)
+    (aave_transform.py:138)."""
+    part = [F.col("name")] + ([F.date_format("date", "yyyy-MM")] if monthly else [])
     w = Window.partitionBy(*part).orderBy("date")
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return w, wcum
+
+
+def capital(p0: Column, li0: Column) -> Column:
+    """End-day capital from the series' first asset price and liquidity
+    index (aave_transform.py:118-124)."""
+    return (
+        F.lit(INITIAL_PRINCIPAL)
+        / p0
+        * F.col("liquidity_index")
+        / li0
+        * F.col("asset_price")
+    )
+
+
+def reward_q(cap: Column) -> Column:
+    """The day's AAVE reward in integer micro-units
+    (aave_transform.py:107-116)."""
+    return quantize(cap * (F.col("aave_apy") / 365 / 100) / F.col("aave_price"))
+
+
+def end_day_investment(cumq: Column, ap: Column, cap: Column) -> Column:
+    """Reward total valued at the day's AAVE price plus capital
+    (aave_transform.py:102-104)."""
+    return cumq / float(QUANT_SCALE) * ap + cap
+
+
+def ratio_change(edi: Column, sdi: Column) -> Column:
+    """The GOTK percent change, edi/sdi - 1."""
+    return edi / sdi - 1
+
+
+def _with_start_day(
+    df: DataFrame,
+    w: Window,
+    change: Callable[[Column, Column], Column] = ratio_change,
+) -> DataFrame:
+    """(date, name, start_day_investment, end_day_investment,
+    percent_change): LAG + IFNULL(…, 10000) over ``df``'s
+    end_day_investment (aave_transform.py:95-100)."""
+    edi = F.col("end_day_investment")
+    sdi = F.coalesce(F.lag("end_day_investment").over(w), F.lit(INITIAL_PRINCIPAL))
+    return df.select(
+        "date",
+        "name",
+        sdi.alias("start_day_investment"),
+        "end_day_investment",
+        change(edi, sdi).alias("percent_change"),
+    )
+
+
+def gotk_base(
+    raw: DataFrame,
+    start_date: str | None = None,
+    end_date: str | None = None,
+    monthly: bool = False,
+) -> DataFrame:
+    """The shared GOTK machinery over RAW_SCHEMA rows, per series.
+
+    Returns (date, name, p0, li0, cap, ap, q, cumq): the series' first
+    asset price and liquidity index, capital, aave_price, the quantized
+    reward and its running total. With no dates it covers the full
+    history (the incremental bootstrap).
+    """
+    df = raw
+    if start_date is not None and end_date is not None:
+        df = df.filter(F.col("date").between(F.lit(start_date), F.lit(end_date)))
+    elif end_date is not None:
+        df = df.filter(F.col("date") <= F.lit(end_date))
+    _, wcum = _windows(monthly)
+    p0 = F.first("asset_price").over(wcum)
+    li0 = F.first("liquidity_index").over(wcum)
+    df = df.select(
+        "date", "name", p0.alias("p0"), li0.alias("li0"),
+        capital(p0, li0).alias("cap"), "aave_apy", "aave_price",
+    )
+    df = df.select(
+        "date", "name", "p0", "li0", "cap",
+        F.col("aave_price").alias("ap"), reward_q(F.col("cap")).alias("q"),
+    )
+    return df.withColumn("cumq", F.sum("q").over(wcum))
 
 
 def growth_of_10k(
@@ -54,59 +150,14 @@ def growth_of_10k(
     shape (date, name, percent_change), compounding reset each calendar
     month (aave_transform.py:133-167).
     """
-    df = raw
-    if start_date is not None and end_date is not None:
-        df = df.filter(F.col("date").between(F.lit(start_date), F.lit(end_date)))
-    elif end_date is not None:
-        df = df.filter(F.col("date") <= F.lit(end_date))
-
-    w, wcum = _windows(monthly)
-
-    # innermost select: reward_rate + end_day_capital (aave_transform.py:114-124)
-    capital = (
-        F.lit(INITIAL_PRINCIPAL)
-        / F.first("asset_price").over(wcum)
-        * F.col("liquidity_index")
-        / F.first("liquidity_index").over(wcum)
-        * F.col("asset_price")
+    edi = end_day_investment(F.col("cumq"), F.col("ap"), F.col("cap"))
+    df = gotk_base(raw, start_date, end_date, monthly).select(
+        "date", "name", edi.alias("end_day_investment")
     )
-    df = df.select(
-        "date",
-        "name",
-        (F.col("aave_apy") / 365 / 100).alias("reward_rate"),
-        capital.alias("end_day_capital"),
-        "aave_price",
-    )
-
-    # running reward accrual (aave_transform.py:107-110)
-    contrib = F.col("end_day_capital") * F.col("reward_rate") / F.col("aave_price")
-    q = F.round(contrib * float(QUANT_SCALE)).cast("long")
-    reward = F.sum(q).over(wcum) / float(QUANT_SCALE)
-    df = df.select(
-        "date", "name", reward.alias("end_day_aave_reward"), "end_day_capital", "aave_price"
-    )
-
-    # end_day_investment (aave_transform.py:102-104)
-    df = df.select(
-        "date",
-        "name",
-        (
-            F.col("end_day_aave_reward") * F.col("aave_price") + F.col("end_day_capital")
-        ).alias("end_day_investment"),
-    )
-
-    # outermost: LAG + IFNULL(…, 10000) (aave_transform.py:95-100 / :136-138)
-    sdi = F.coalesce(F.lag("end_day_investment").over(w), F.lit(INITIAL_PRINCIPAL))
-    pc = (F.col("end_day_investment") / sdi - 1).alias("percent_change")
+    out = _with_start_day(df, _windows(monthly)[0])
     if monthly:
-        return df.select("date", "name", pc)
-    return df.select(
-        "date",
-        "name",
-        sdi.alias("start_day_investment"),
-        "end_day_investment",
-        pc,
-    )
+        return out.select("date", "name", "percent_change")
+    return out
 
 
 def price_gotk(price: DataFrame) -> DataFrame:
@@ -116,7 +167,7 @@ def price_gotk(price: DataFrame) -> DataFrame:
     reference computes percent_change as SAFE_DIVIDE(edi - sdi, sdi)
     here (not edi/sdi - 1) — replicated exactly.
     """
-    w, wcum = _windows(monthly=False)
+    w, wcum = _windows()
     df = price.select(
         "date",
         "name",
@@ -125,20 +176,7 @@ def price_gotk(price: DataFrame) -> DataFrame:
             * F.col("price_usd")
         ).alias("end_day_investment"),
     )
-    sdi = F.coalesce(F.lag("end_day_investment").over(w), F.lit(INITIAL_PRINCIPAL))
-    df = df.select(
-        "date",
-        "name",
-        sdi.alias("start_day_investment"),
-        "end_day_investment",
-    )
-    return df.withColumn(
-        "percent_change",
-        F.try_divide(
-            F.col("end_day_investment") - F.col("start_day_investment"),
-            F.col("start_day_investment"),
-        ),
-    )
+    return _with_start_day(df, w, lambda edi, sdi: F.try_divide(edi - sdi, sdi))
 
 
 def capital_gotk(raw: DataFrame) -> DataFrame:
@@ -146,21 +184,5 @@ def capital_gotk(raw: DataFrame) -> DataFrame:
 
     The stablecoin-benchmark branch: aave_transform.py:43-62.
     """
-    w, wcum = _windows(monthly=False)
-    edi = (
-        F.lit(INITIAL_PRINCIPAL)
-        / F.first("asset_price").over(wcum)
-        * F.col("liquidity_index")
-        / F.first("liquidity_index").over(wcum)
-        * F.col("asset_price")
-    )
-    df = raw.select("date", "name", edi.alias("end_day_investment"))
-    sdi = F.coalesce(F.lag("end_day_investment").over(w), F.lit(INITIAL_PRINCIPAL))
-    return df.select(
-        "date",
-        "name",
-        sdi.alias("start_day_investment"),
-        "end_day_investment",
-        (F.col("end_day_investment") / sdi - 1).alias("percent_change"),
-    )
-
+    df = gotk_base(raw).select("date", "name", F.col("cap").alias("end_day_investment"))
+    return _with_start_day(df, _windows()[0])

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.config import QUANT_SCALE
+from defimap_data_pipelines_spark.operators.cachereg import pin
 
 
 def _tail(df: DataFrame, n: int) -> DataFrame:
@@ -190,7 +191,7 @@ def risk_metrics(
     """
     # materialize the tail slice once: four aggregation families reuse it
     # (|names| * day_period rows — tiny at any corpus scale)
-    gotk = _tail(gotk, day_period).cache()
+    gotk = pin(_tail(gotk, day_period).cache())
     sd = sd_annualized(gotk, day_period)
     ar = annual_return(gotk, day_period)
     reg = ols_alpha_beta_r2(gotk, benchmark, day_period)

@@ -4,16 +4,17 @@
 The reference composes SIX full GOTK subqueries (1d/1m/3m/6m/1y/ytd) over
 overlapping date ranges — six scans of the raw table (SURVEY.md §4 calls
 this out as the anti-pattern not to replicate). ``trailing_returns``
-computes the GOTK machinery ONCE from the earliest needed start date and
-re-bases each period arm algebraically:
+runs ``operators.growth.gotk_base`` ONCE from the earliest needed start
+date and re-bases each period arm algebraically:
 
     capital_s(t) = capital_b(t) * P / capital_b(s)
     reward_s(t)  = (P / capital_b(s)) * (C(t) - C(s-))      [C = cum contrib]
     edi_s(t)     = (P / capital_b(s)) * ((C(t)-C(s-)) * aave_price_t
                                           + capital_b(t))
 
-where b is the common base date and P = 10000. The reward cumsum is
-quantized to integer micro-units (see operators/growth.py), so
+where b is the common base date and P = 10000. The capital, reward,
+end-day and start-day formulas are growth.py's; only the rebase is
+defined here. The reward cumsum is quantized to integer micro-units, so
 C(t) - C(s-) is an exact bigint subtraction and the whole rebase is
 bit-deterministic. One shuffle by ``name`` total, instead of six.
 
@@ -29,15 +30,19 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from defimap_data_pipelines_spark.config import (
-    INITIAL_PRINCIPAL,
-    QUANT_SCALE,
-    TRAILING_PERIODS,
+from defimap_data_pipelines_spark.config import INITIAL_PRINCIPAL, TRAILING_PERIODS
+from defimap_data_pipelines_spark.operators.cachereg import pin
+from defimap_data_pipelines_spark.operators.growth import (
+    _windows,
+    _with_start_day,
+    end_day_investment,
+    gotk_base,
+    growth_of_10k,
+    ratio_change,
 )
-from defimap_data_pipelines_spark.operators.growth import growth_of_10k
 
 
 def period_starts(ds: str) -> list[tuple[str, str, bool]]:
@@ -51,54 +56,14 @@ def period_starts(ds: str) -> list[tuple[str, str, bool]]:
     return out
 
 
-def gotk_base(
-    raw: DataFrame, start_date: str | None = None, end_date: str | None = None
-) -> DataFrame:
-    """Shared GOTK machinery from a common base date.
-
-    Returns (date, name, cap, ap, q, Q): capital from the base start,
-    aave_price, quantized reward contribution and its running total.
-    With no dates, covers the full history (the incremental-mode
-    substrate — pipelines/incremental.py persists this frame).
-    """
-    w = Window.partitionBy("name").orderBy("date")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df = raw
-    if start_date is not None and end_date is not None:
-        df = df.filter(F.col("date").between(F.lit(start_date), F.lit(end_date)))
-    elif end_date is not None:
-        df = df.filter(F.col("date") <= F.lit(end_date))
-    capital = (
-        F.lit(INITIAL_PRINCIPAL)
-        / F.first("asset_price").over(wcum)
-        * F.col("liquidity_index")
-        / F.first("liquidity_index").over(wcum)
-        * F.col("asset_price")
-    )
-    df = df.select(
-        "date",
-        "name",
-        (F.col("aave_apy") / 365 / 100).alias("reward_rate"),
-        capital.alias("cap"),
-        F.col("aave_price").alias("ap"),
-    )
-    contrib = F.col("cap") * F.col("reward_rate") / F.col("ap")
-    df = df.select(
-        "date", "name", "cap", "ap",
-        F.round(contrib * float(QUANT_SCALE)).cast("long").alias("q"),
-    )
-    return df.withColumn("cumq", F.sum("q").over(wcum))
-
-
 def _rebased_arm(
     base: DataFrame, period: str, start: str, ds: str, coverage_rule: bool
 ) -> DataFrame:
-    w = Window.partitionBy("name").orderBy("date")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w, wcum = _windows()
     sliced = base.filter(F.col("date").between(F.lit(start), F.lit(ds)))
     qprev = F.first("cumq").over(wcum) - F.first("q").over(wcum)
-    edi = (F.lit(INITIAL_PRINCIPAL) / F.first("cap").over(wcum)) * (
-        (F.col("cumq") - qprev) / float(QUANT_SCALE) * F.col("ap") + F.col("cap")
+    edi = (F.lit(INITIAL_PRINCIPAL) / F.first("cap").over(wcum)) * end_day_investment(
+        F.col("cumq") - qprev, F.col("ap"), F.col("cap")
     )
     df = sliced.select(
         "date",
@@ -106,17 +71,15 @@ def _rebased_arm(
         F.first("date").over(wcum).alias("first_date"),
         edi.alias("end_day_investment"),
     )
-    sdi = F.coalesce(
-        F.lag("end_day_investment").over(w), F.lit(INITIAL_PRINCIPAL)
-    )
-    pc = F.col("end_day_investment") / sdi - 1
-    if coverage_rule:
-        pc = F.when(F.col("first_date") == F.lit(start).cast("date"), pc)
-    return df.select(
-        "date",
-        F.lit(period).alias("period"),
-        "name",
-        pc.alias("percent_change"),
+
+    def change(edi: Column, sdi: Column) -> Column:
+        pc = ratio_change(edi, sdi)
+        if coverage_rule:
+            return F.when(F.col("first_date") == F.lit(start).cast("date"), pc)
+        return pc
+
+    return _with_start_day(df, w, change).select(
+        "date", F.lit(period).alias("period"), "name", "percent_change"
     )
 
 
@@ -126,7 +89,7 @@ def trailing_returns(raw: DataFrame, ds: str) -> DataFrame:
     base_start = min(s for _, s, _ in starts)
     # cache: UNION branches don't share subplans in Spark, so without
     # this each of the 6 arms would recompute the base windows
-    base = gotk_base(raw, base_start, ds).cache()
+    base = pin(gotk_base(raw, base_start, ds).cache())
     arms = [_rebased_arm(base, p, s, ds, rule) for p, s, rule in starts]
     out = arms[0]
     for a in arms[1:]:
@@ -136,8 +99,7 @@ def trailing_returns(raw: DataFrame, ds: str) -> DataFrame:
 
 def trailing_returns_naive(raw: DataFrame, ds: str) -> DataFrame:
     """Reference-literal 6-subquery trailing returns (for testing)."""
-    w = Window.partitionBy("name").orderBy("date")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    _, wcum = _windows()
     arms = []
     for period, start, rule in period_starts(ds):
         g = growth_of_10k(raw, start, ds)

@@ -2,13 +2,28 @@
 
 tvl = atoken_supply * asset_price; change vs previous day with
 self-defaulting LAG (W5: IFNULL(LAG(tvl), tvl)) and NULLIF-guarded
-percent change. Windows partitioned by ``name`` (SURVEY.md §2.5).
+percent change. Windows partitioned by ``name`` (SURVEY.md §2.5). The
+incremental step (pipelines/incremental.py) carries the previous tvl as
+state and shares ``tvl_change``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def tvl_change(tvl: Column, prev: Column) -> tuple[Column, Column]:
+    """(change_tvl, percent_change) of ``tvl`` against the previous day."""
+    change = tvl - prev
+    pct = (
+        F.coalesce(
+            change / F.when(tvl == 0, F.lit(None)).otherwise(tvl),
+            F.lit(0.0),
+        )
+        * 100
+    )
+    return change.alias("change_tvl"), pct.alias("percent_change")
 
 
 def tvl(raw: DataFrame, ds: str | None = None) -> DataFrame:
@@ -19,19 +34,6 @@ def tvl(raw: DataFrame, ds: str | None = None) -> DataFrame:
     df = df.select(
         "date", "name", (F.col("atoken_supply") * F.col("asset_price")).alias("tvl")
     )
-    prev = F.coalesce(F.lag("tvl").over(w), F.col("tvl"))
-    change = F.col("tvl") - prev
-    pct = (
-        F.coalesce(
-            change / F.when(F.col("tvl") == 0, F.lit(None)).otherwise(F.col("tvl")),
-            F.lit(0.0),
-        )
-        * 100
-    )
-    return df.select(
-        "date",
-        "name",
-        "tvl",
-        change.alias("change_tvl"),
-        pct.alias("percent_change"),
-    )
+    tvl_ = F.col("tvl")
+    prev = F.coalesce(F.lag("tvl").over(w), tvl_)
+    return df.select("date", "name", "tvl", *tvl_change(tvl_, prev))

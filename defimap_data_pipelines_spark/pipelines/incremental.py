@@ -6,25 +6,72 @@ day. The GOTK recurrence only needs O(1) state per strategy:
 
     state  = (first_asset_price, first_liquidity_index,
               cum_reward_q  [exact bigint micro-units],
-              prev_end_day_investment)
-    cap_t  = P / p0 * li_t / li0 * p_t
-    q_t    = round(cap_t * rate_t / ap_t * 1e6)
-    edi_t  = (Q_{t-1} + q_t)/1e6 * ap_t + cap_t
-    pc_t   = edi_t / prev_edi - 1
+              prev_end_day_investment, last_date)
 
-so a day's update joins the new raw rows against the state table,
-emits the new GOTK rows, and writes back the advanced state — no
-history scan. The quantized reward total makes the incremental path
-EXACTLY equal to the batch recompute (integer accumulation is
-associative), which test_incremental.py asserts row-for-row.
+and each day applies operators/growth.py's capital, reward and end-day
+formulas to that state: a day's update joins the new raw rows against
+the state table, emits the new GOTK rows, and writes back the advanced
+state — no history scan. The quantized reward total makes the
+incremental path EXACTLY equal to the batch recompute (integer
+accumulation is associative), which test_incremental.py asserts
+row-for-row.
+
+Every step goes through ``_advance``: a name whose state is already at
+or past the day's date is left as it is and emits no row, so applying
+a day twice changes nothing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from defimap_data_pipelines_spark.config import INITIAL_PRINCIPAL, QUANT_SCALE
+from defimap_data_pipelines_spark.config import INITIAL_PRINCIPAL
+from defimap_data_pipelines_spark.operators.growth import (
+    capital,
+    end_day_investment,
+    gotk_base,
+    ratio_change,
+    reward_q,
+)
+from defimap_data_pipelines_spark.operators.tvl import tvl_change
+
+
+def _last_row(df: DataFrame) -> DataFrame:
+    """Each name's latest row."""
+    last = Window.partitionBy("name").orderBy(F.col("date").desc())
+    return df.withColumn("_rn", F.row_number().over(last)).filter(F.col("_rn") == 1)
+
+
+def _advance(
+    state: DataFrame,
+    new_raw: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    state_cols: tuple[str, ...],
+) -> tuple[DataFrame, DataFrame]:
+    """Advance ``state`` by the day in ``new_raw``: -> (step rows, state').
+
+    ``step`` maps the state-joined day rows to the day's frame;
+    ``state_cols`` (SQL expressions) project that frame back onto the
+    state schema, with ``last_date`` set to the day. Names whose
+    ``last_date`` is at or past the day (a replay) and names with no row
+    today (a gap day must not reset a series) keep their state and emit
+    no row.
+    """
+    joined = new_raw.join(F.broadcast(state), "name", "left").filter(
+        F.col("last_date").isNull() | (F.col("last_date") < F.col("date"))
+    )
+    rows = step(joined)
+    day = new_raw.select(F.col("name").alias("_name"), F.col("date").alias("_day"))
+    untouched = state.join(
+        day,
+        (F.col("name") == F.col("_name")) & (F.col("last_date") < F.col("_day")),
+        "left_anti",
+    )
+    updated = rows.selectExpr(*state_cols, "date AS last_date")
+    return rows, updated.unionByName(untouched)
 
 
 def initial_gotk_state(raw_history: DataFrame) -> DataFrame:
@@ -32,44 +79,9 @@ def initial_gotk_state(raw_history: DataFrame) -> DataFrame:
 
     Returns (name, p0, li0, cumq, prev_edi, last_date).
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("name").orderBy("date")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    capital = (
-        F.lit(INITIAL_PRINCIPAL)
-        / F.first("asset_price").over(wcum)
-        * F.col("liquidity_index")
-        / F.first("liquidity_index").over(wcum)
-        * F.col("asset_price")
-    )
-    df = raw_history.select(
-        "date",
-        "name",
-        F.first("asset_price").over(wcum).alias("p0"),
-        F.first("liquidity_index").over(wcum).alias("li0"),
-        (F.col("aave_apy") / 365 / 100).alias("rate"),
-        capital.alias("cap"),
-        F.col("aave_price").alias("ap"),
-    )
-    q = F.round(F.col("cap") * F.col("rate") / F.col("ap") * float(QUANT_SCALE)).cast(
-        "long"
-    )
-    df = df.withColumn("cumq", F.sum(q).over(wcum))
-    edi = F.col("cumq") / float(QUANT_SCALE) * F.col("ap") + F.col("cap")
-    df = df.withColumn("edi", edi)
-    last = Window.partitionBy("name").orderBy(F.col("date").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(last))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "name",
-            "p0",
-            "li0",
-            "cumq",
-            F.col("edi").alias("prev_edi"),
-            F.col("date").alias("last_date"),
-        )
+    edi = end_day_investment(F.col("cumq"), F.col("ap"), F.col("cap"))
+    return _last_row(gotk_base(raw_history).withColumn("prev_edi", edi)).select(
+        "name", "p0", "li0", "cumq", "prev_edi", F.col("date").alias("last_date")
     )
 
 
@@ -82,22 +94,10 @@ def _gotk_advance(joined: DataFrame) -> DataFrame:
     p0 = F.coalesce(F.col("p0"), F.col("asset_price"))
     li0 = F.coalesce(F.col("li0"), F.col("liquidity_index"))
     cumq_prev = F.coalesce(F.col("cumq"), F.lit(0).cast("long"))
-    prev_edi = F.coalesce(
-        F.col("prev_edi"), F.lit(INITIAL_PRINCIPAL).cast("double")
-    )
-
-    cap = (
-        F.lit(INITIAL_PRINCIPAL)
-        / p0
-        * F.col("liquidity_index")
-        / li0
-        * F.col("asset_price")
-    )
-    rate = F.col("aave_apy") / 365 / 100
-    q = F.round(cap * rate / F.col("aave_price") * float(QUANT_SCALE)).cast("long")
+    prev_edi = F.coalesce(F.col("prev_edi"), F.lit(INITIAL_PRINCIPAL).cast("double"))
+    cap = capital(p0, li0)
+    q = reward_q(cap)
     cumq = cumq_prev + q
-    edi = cumq / float(QUANT_SCALE) * F.col("aave_price") + cap
-
     return joined.select(
         "date",
         "name",
@@ -108,8 +108,12 @@ def _gotk_advance(joined: DataFrame) -> DataFrame:
         q.alias("q"),
         cumq.alias("cumq"),
         prev_edi.alias("start_day_investment"),
-        edi.alias("end_day_investment"),
+        end_day_investment(cumq, F.col("aave_price"), cap).alias("end_day_investment"),
     )
+
+
+# the persisted GOTK state, shared by the GOTK-rows and cum-series steps
+_GOTK_STATE = ("name", "p0", "li0", "cumq", "end_day_investment AS prev_edi")
 
 
 def incremental_gotk_step(
@@ -121,72 +125,39 @@ def incremental_gotk_step(
     unseen in the state start a fresh series (p0/li0 from their first
     row, prev_edi = INITIAL_PRINCIPAL).
     """
-    step = _gotk_advance(new_raw.join(F.broadcast(state), "name", "left"))
+    step, state = _advance(state, new_raw, _gotk_advance, _GOTK_STATE)
+    edi, sdi = F.col("end_day_investment"), F.col("start_day_investment")
     gotk_rows = step.select(
         "date",
         "name",
         "start_day_investment",
         "end_day_investment",
-        (F.col("end_day_investment") / F.col("start_day_investment") - 1).alias(
-            "percent_change"
-        ),
+        ratio_change(edi, sdi).alias("percent_change"),
     )
-    updated = step.select(
-        "name",
-        "p0",
-        "li0",
-        "cumq",
-        F.col("end_day_investment").alias("prev_edi"),
-        F.col("date").alias("last_date"),
-    )
-    # names with no row today keep their state (a gap day must not
-    # reset a strategy's series)
-    untouched = state.join(new_raw.select("name"), "name", "left_anti")
-    return gotk_rows, updated.unionByName(untouched)
+    return gotk_rows, state
 
 
 def initial_tvl_state(raw_history: DataFrame) -> DataFrame:
     """(name, prev_tvl, last_date) from the latest history row."""
-    from pyspark.sql import Window
-
-    last = Window.partitionBy("name").orderBy(F.col("date").desc())
-    return (
-        raw_history.withColumn("_rn", F.row_number().over(last))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "name",
-            (F.col("atoken_supply") * F.col("asset_price")).alias("prev_tvl"),
-            F.col("date").alias("last_date"),
-        )
+    return _last_row(raw_history).select(
+        "name",
+        (F.col("atoken_supply") * F.col("asset_price")).alias("prev_tvl"),
+        F.col("date").alias("last_date"),
     )
+
+
+def _tvl_advance(joined: DataFrame) -> DataFrame:
+    """One-day TVL advance (W5 self-defaulting lag carried as state)."""
+    tvl = F.col("atoken_supply") * F.col("asset_price")
+    prev = F.coalesce(F.col("prev_tvl"), tvl)
+    return joined.select("date", "name", tvl.alias("tvl"), *tvl_change(tvl, prev))
 
 
 def incremental_tvl_step(
     state: DataFrame, new_raw: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Advance TVL one day (W5 self-defaulting lag carried as state)."""
-    joined = new_raw.join(F.broadcast(state), "name", "left")
-    tvl = F.col("atoken_supply") * F.col("asset_price")
-    prev = F.coalesce(F.col("prev_tvl"), tvl)
-    change = tvl - prev
-    pct = (
-        F.coalesce(
-            change / F.when(tvl == 0, F.lit(None)).otherwise(tvl), F.lit(0.0)
-        )
-        * 100
-    )
-    rows = joined.select(
-        "date",
-        "name",
-        tvl.alias("tvl"),
-        change.alias("change_tvl"),
-        pct.alias("percent_change"),
-    )
-    new_state = joined.select(
-        "name", tvl.alias("prev_tvl"), F.col("date").alias("last_date")
-    )
-    untouched = state.join(new_raw.select("name"), "name", "left_anti")
-    return rows, new_state.unionByName(untouched)
+    """Advance TVL one day: (state, day's raw rows) -> (tvl rows, state')."""
+    return _advance(state, new_raw, _tvl_advance, ("name", "tvl AS prev_tvl"))
 
 
 # ---- incremental trailing returns --------------------------------------
@@ -211,9 +182,7 @@ def incremental_tvl_step(
 def initial_trailing_cum(raw_history: DataFrame) -> DataFrame:
     """Bootstrap the persisted base cum series (date,name,cap,ap,q,cumq)
     from history — one batch pass of the shared GOTK machinery."""
-    from defimap_data_pipelines_spark.operators.trailing import gotk_base
-
-    return gotk_base(raw_history)
+    return gotk_base(raw_history).select("date", "name", "cap", "ap", "q", "cumq")
 
 
 def incremental_cum_step(
@@ -224,18 +193,8 @@ def incremental_cum_step(
     Same state schema as :func:`incremental_gotk_step` (prev_edi rides
     along unused), so one state table can serve both consumers.
     """
-    step = _gotk_advance(new_raw.join(F.broadcast(state), "name", "left"))
-    cum_rows = step.select("date", "name", "cap", "ap", "q", "cumq")
-    updated = step.select(
-        "name",
-        "p0",
-        "li0",
-        "cumq",
-        F.col("end_day_investment").alias("prev_edi"),
-        F.col("date").alias("last_date"),
-    )
-    untouched = state.join(new_raw.select("name"), "name", "left_anti")
-    return cum_rows, updated.unionByName(untouched)
+    step, state = _advance(state, new_raw, _gotk_advance, _GOTK_STATE)
+    return step.select("date", "name", "cap", "ap", "q", "cumq"), state
 
 
 def trailing_scalars_from_cum(cum: DataFrame, ds: str) -> DataFrame:
@@ -262,11 +221,8 @@ def trailing_scalars_from_cum(cum: DataFrame, ds: str) -> DataFrame:
             )
             .filter(F.col("last_date") == F.lit(ds).cast("date"))
         )
-        value = (
-            (F.col("e.cumq") - F.col("s.cumq") + F.col("s.q"))
-            / float(QUANT_SCALE)
-            * F.col("e.ap")
-            + F.col("e.cap")
+        value = end_day_investment(
+            F.col("e.cumq") - F.col("s.cumq") + F.col("s.q"), F.col("e.ap"), F.col("e.cap")
         ) / F.col("s.cap") - 1
         if rule:
             value = F.when(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.config import STABLECOINS
+from defimap_data_pipelines_spark.operators.cachereg import pin
 from defimap_data_pipelines_spark.operators.growth import (
     capital_gotk,
     growth_of_10k,
@@ -58,7 +59,7 @@ def run_transform(
     import datetime as dt
 
     stablecoins = stablecoins or STABLECOINS
-    raw = raw.filter(F.col("date") <= F.lit(ds)).cache()
+    raw = pin(raw.filter(F.col("date") <= F.lit(ds)).cache())
 
     gotk = growth_of_10k(raw, start_date, ds)
     tvl_df = tvl(raw, ds)

@@ -185,7 +185,7 @@ def q_tvl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _trailing_base_sql(base_start: str, ds: str) -> str:
     """Shared GOTK machinery CTE for the rebased trailing arms
-    (mirror of operators/trailing.gotk_base)."""
+    (mirror of operators/growth.gotk_base)."""
     return f"""
         SELECT date, name, cap, ap, q, SUM(q) OVER wncum AS cumq
         FROM (

@@ -3,8 +3,6 @@
 from defimap_data_pipelines_spark.sources.parquet import (  # noqa: F401
     TESTDATA_TABLES,
     read_table,
-    read_tables,
-    register_views,
 )
 from defimap_data_pipelines_spark.sources.writers import (  # noqa: F401
     idempotent_replace_range,

@@ -72,13 +72,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for c in ntz_cols:
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def read_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each table as a temp view for the spark.sql front-end."""
-    for n, df in read_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(n)

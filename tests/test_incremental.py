@@ -88,6 +88,51 @@ def test_incremental_tvl_equals_batch(spark, sf_dir):
         assert r.percent_change == b.percent_change
 
 
+@pytest.mark.parametrize("kind", ["gotk", "tvl"])
+def test_replayed_day_changes_nothing(spark, sf_dir, kind):
+    """Applying a day to the state it produced is a no-op: no rows and
+    the same state, so the next day still matches an uninterrupted run
+    (a retried daily job or a replayed micro-batch must not advance a
+    series twice)."""
+    from defimap_data_pipelines_spark.pipelines.incremental import (
+        incremental_tvl_step,
+        initial_tvl_state,
+    )
+
+    init, step = {
+        "gotk": (initial_gotk_state, incremental_gotk_step),
+        "tvl": (initial_tvl_state, incremental_tvl_step),
+    }[kind]
+    raw = orders_raw_series(spark, sf_dir).filter(
+        F.col("date").between("2001-07-01", "2001-07-31")
+    ).cache()
+    split = "2001-07-25"
+    d1, d2 = sorted(
+        r.date for r in raw.filter(F.col("date") > split)
+        .select("date").distinct().collect()
+    )[:2]
+
+    def day(d):
+        return raw.filter(F.col("date") == F.lit(str(d)))
+
+    def rows_of(df):
+        return sorted(df.collect(), key=lambda r: r.name)
+
+    def settle(state):
+        return spark.createDataFrame(state.collect(), state.schema)
+
+    state1 = settle(step(settle(init(raw.filter(F.col("date") <= split))), day(d1))[1])
+    again, replayed = step(state1, day(d1))
+    assert again.count() == 0
+    replayed = settle(replayed)
+    assert rows_of(replayed) == rows_of(state1)
+
+    straight, _ = step(state1, day(d2))
+    after, _ = step(replayed, day(d2))
+    assert len(rows_of(straight)) > 0
+    assert rows_of(after) == rows_of(straight)
+
+
 def test_incremental_cum_equals_batch(spark, sf_dir):
     """Advancing the persisted cum series day-by-day reproduces the
     full-history batch pass bit-for-bit (integer cumq; identical cap

@@ -2,8 +2,10 @@
 
 Every top-level function and class in ``defimap_data_pipelines_spark``
 must be named, as a whole word, somewhere outside its own definition:
-in the package (a package ``__init__`` re-export counts), ``tests/``,
-``tools/``, ``perfbench/`` or ``__spark_entry__.py``.
+in the package, ``tests/``, ``tools/``, ``perfbench/`` or
+``__spark_entry__.py``. A package ``__init__`` re-export is not a use:
+the import lines of the package's ``__init__.py`` files are not
+searched.
 ``@register``ed queries are exempt: the registry reaches them by name
 string. Pure AST + regex; no Spark session.
 """
@@ -33,6 +35,19 @@ def _py_files(root: Path) -> list[Path]:
     return sorted(p for p in root.rglob("*.py") if "__pycache__" not in p.parts)
 
 
+def _searched_text(path: Path) -> str:
+    """``path``'s text, minus the import lines of a package __init__."""
+    text = path.read_text()
+    if path.name != "__init__.py" or PACKAGE not in path.parents:
+        return text
+    lines = text.splitlines()
+    for node in ast.parse(text).body:
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for i in range(node.lineno - 1, node.end_lineno):
+                lines[i] = ""
+    return "\n".join(lines)
+
+
 def _is_registered(node: ast.AST) -> bool:
     for d in node.decorator_list:
         f = d.func if isinstance(d, ast.Call) else d
@@ -42,7 +57,7 @@ def _is_registered(node: ast.AST) -> bool:
 
 
 def _unreferenced() -> list[str]:
-    texts = {p: p.read_text() for root in SEARCHED for p in _py_files(root)}
+    texts = {p: _searched_text(p) for root in SEARCHED for p in _py_files(root)}
     words = Counter()
     for text in texts.values():
         words.update(_WORD.findall(text))

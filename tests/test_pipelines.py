@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from defimap_data_pipelines_spark.operators.cachereg import release
 from defimap_data_pipelines_spark.pipelines.ingest import (
     clean_bronze,
     date_range_frame,
@@ -93,6 +94,19 @@ def test_transform_end_to_end(spark, bronze):
         assert row.valley_date >= row.peak_date
     trailing = tables["pre_trailing_return"]
     assert trailing.select("period").distinct().count() == 6
+
+
+def test_run_transform_pins_its_caches(spark):
+    """The raw scan, the trailing-returns base and the risk tail that
+    run_transform caches live in the session's store, so a long-lived
+    session's release() frees them instead of leaking three frames per
+    daily run."""
+    s2 = spark.newSession()
+    raw = sample_chain_state(
+        date_range_frame(s2, "2023-01-01", "2023-06-30", ["aave_usdc", "aave_wbtc"])
+    )
+    run_transform(raw, ds="2023-06-30", start_date="2023-01-01")
+    assert release(s2) == 3
 
 
 def test_load_stamps_strategy_id(spark, bronze):
