@@ -330,7 +330,7 @@ def clean_corpus_incremental(
         _verify_jaccard,
         doc_shingles,
         hashed_shingles,
-        minhash_signatures,
+        minhash_bands,
     )
     from defimap_data_pipelines_spark.operators.textops import (
         with_quality_score,
@@ -353,33 +353,7 @@ def clean_corpus_incremental(
 
     # band the new signatures against old+new: every pair touching a
     # new doc is found; old-old pairs already live in state.pairs
-    num_hashes, bands = 64, 16
-    r = num_hashes // bands
-    sig_all = minhash_signatures(None, text_col, hashed=hashed_all)
-
-    def banded(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.element_at("sig", b * r + i)
-                                    for i in range(1, r + 1)
-                                ],
-                                F.lit(b),
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.bucket")
-
-    b_all = banded(sig_all).localCheckpoint()
+    b_all = minhash_bands(hashed_all).localCheckpoint()
     new_ids = hashed_new.select("doc_id")
     b_new = b_all.join(new_ids, "doc_id", "left_semi")
     cand = (

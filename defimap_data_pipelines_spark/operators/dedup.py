@@ -4,16 +4,19 @@ LLM-training-data pipeline, 100 TB posture).
 - exact_dedup: hash-groupBy on the normalized-text fingerprint. One
   shuffle on the hash; at scale the fingerprint is computed scan-side
   and the groupBy is the only wide stage.
-- ngram_jaccard_pairs: EXACT near-dup pairs via distinct word-shingle
-  inverted index self-join — the scalable exact formulation
-  (shingle -> docs postings; pairs only materialize for docs sharing a
-  shingle). Intersections/unions are integer counts, so results are
-  engine-reproducible.
+- ngram_jaccard_pairs: EXACT near-dup pairs in the SPARSE regime
+  (shingle vocab >> docs, e.g. word n-grams) via a distinct-shingle
+  inverted-index self-join (shingle -> docs postings; pairs only
+  materialize for docs sharing a shingle). Intersections/unions are
+  integer counts, so results are engine-reproducible.
+- dense_jaccard_pairs: the same exact pairs in the DENSE regime
+  (small vocab, e.g. char n-grams), as block BLAS matmuls.
 - minhash_lsh_candidates: the approximate scale path. Per doc: k minhash
   values (xxhash64 with k salts over distinct shingles), banded into
-  b bands; docs sharing a band bucket become candidates; candidates are
-  verified with exact Jaccard. At 100 TB the band-bucket join replaces
-  the quadratic blowup with collision groups.
+  b bands (minhash_bands); docs sharing a band bucket become
+  candidates; candidates are verified with exact Jaccard. At 100 TB
+  the band-bucket join replaces the quadratic blowup with collision
+  groups.
 - simhash64: 64-bit simhash from token hashes; near-dups = pairs within
   Hamming distance d (joined on rotated prefix buckets).
 """
@@ -25,13 +28,6 @@ from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.functions.text import fingerprint, word_shingles
 from defimap_data_pipelines_spark.operators.cachereg import pin
-
-
-class BitsetVocabGateExceeded(ValueError):
-    """The dense-regime bitset kernel is gated at 2^16 distinct
-    shingles (per-task matrices are block_docs x vocab); callers that
-    asked for it explicitly fall back to the still-exact df-ordered
-    prefix strategy rather than failing the query outright."""
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -61,17 +57,44 @@ def hashed_shingles(shingles: DataFrame) -> DataFrame:
     sorted ascending.
 
     The hashed form is the workhorse for set-similarity: 64-bit
-    integer arrays intersect ~5x faster than string arrays, and the
-    hash order doubles as the global shingle order for prefix
-    filtering — computable per-row at scan time, with no
-    document-frequency table and no window sort (both of which are
-    extra shuffles). Collisions (~|shingles|^2 / 2^64) are negligible
-    and the string-based oracle in CI would catch one.
+    integer arrays intersect ~5x faster than string arrays and
+    self-join on a fixed-width key. Collisions (~|shingles|^2 / 2^64)
+    are negligible and the string-based oracle in CI would catch one.
     """
     return shingles.select(
         "doc_id",
         F.sort_array(F.transform("_sh", lambda s: F.xxhash64(s))).alias("_hh"),
     )
+
+
+def _hashed(
+    docs: DataFrame,
+    text_col: str,
+    n: int,
+    shingles: DataFrame | None,
+    hashed: DataFrame | None,
+) -> DataFrame:
+    """The caller's hashed-shingle frame, else one built from
+    ``shingles``, else from ``docs``' word n-grams."""
+    if hashed is not None:
+        return hashed
+    sh = shingles if shingles is not None else doc_shingles(docs, text_col, n)
+    return hashed_shingles(sh)
+
+
+def _jaccard_at_least(counts: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) from (doc_a, doc_b, _ni, _na, _nb)
+    intersection and set sizes, kept at jaccard >= threshold.
+    jaccard = ni / (na + nb - ni) in float64 — the identical IEEE
+    division the SQL oracles perform."""
+    jac = counts.select(
+        "doc_a",
+        "doc_b",
+        (
+            F.col("_ni") / (F.col("_na") + F.col("_nb") - F.col("_ni")).cast("double")
+        ).alias("jaccard"),
+    )
+    return jac.filter(F.col("jaccard") >= threshold)
 
 
 def ngram_jaccard_pairs(
@@ -81,201 +104,95 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     shingles: DataFrame | None = None,
     hashed: DataFrame | None = None,
-    strategy: str = "auto",
-    order: str = "hash",
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-duplicate pairs (doc_a < doc_b).
+    """Exact n-gram Jaccard near-duplicate pairs (doc_a < doc_b), the
+    SPARSE-regime path: shingle vocab large against the corpus, as
+    with word n-grams.
 
-    jaccard = |A∩B| / (|A| + |B| - |A∩B|) over distinct word n-grams.
+    jaccard = |A∩B| / (|A| + |B| - |A∩B|) over distinct n-grams.
 
-    Two physical strategies over the same hashed-shingle frame, both
-    result-identical to the naive formulation (modulo 64-bit shingle
-    hash collisions, probability ~|shingles|^2/2^64; the string-based
-    oracle in CI would catch one):
+    Inverted-index self-join on the shingle hash: a map-side-combining
+    groupBy counts each pair's intersection directly, so one shuffle
+    round yields the result with no second verification pass. Pairs
+    only materialize for docs sharing a shingle; the size-ratio
+    filter drops those whose sizes alone rule out the threshold.
+    Result-identical to the naive formulation modulo 64-bit shingle
+    hash collisions (probability ~|shingles|^2/2^64; the string-based
+    oracle in CI would catch one).
 
-    - ``"index"``: inverted-index self-join on shingle hash, counting
-      the intersection directly with a map-side-combining groupBy —
-      a single shuffle round, no second verification pass. Fastest
-      when the prefix filter prunes weakly (low thresholds: at t the
-      prefix is ~(1-t) of each doc, so t=0.35 prunes only ~40% of
-      co-occurring pairs but pays a whole extra pass for it).
-    - ``"prefix"``: PREFIX FILTERING (Chaudhuri et al. / PPJoin
-      family). Under ANY global total order of shingles, two docs
-      with jaccard >= t MUST collide within their first
-      |d| - ceil(t*|d|) + 1 shingles. We order by xxhash64(shingle),
-      so each doc's prefix is a per-row slice of its sorted hash
-      array — computed at scan time with NO document-frequency table
-      and no window sort (the df-ascending variant costs two extra
-      shuffles and measured ~1.6x slower end-to-end despite ~30%
-      fewer candidates). Candidates are then verified with bigint
-      array_intersect. This is the 100 TB path for high thresholds:
-      join volume shrinks ~quadratically in (1-t) and the
-      frequent-shingle blowup of the full index join never
-      materializes.
-
-    ``"auto"`` picks index below t=0.5 and prefix at or above.
-
-    ``order`` controls the prefix strategy's global shingle order:
-    ``"hash"`` (default — free, computed at scan time) or ``"df"``
-    (document-frequency ascending, the PPJoin ordering). Hash order
-    treats hot shingles as random, so on corpora whose shingle
-    vocabulary is SMALL relative to doc count (character n-grams:
-    2k distinct 5-grams across 5k docs here, top df ~80% of docs) a
-    hot shingle lands in thousands of prefixes and the candidate
-    join goes quadratic — measured 152 s at sf0.1. df-ascending puts
-    each doc's globally-rarest shingles in its prefix, so candidates
-    collide only on rare shingles (152 s -> 26 s, same exact
-    output). Costs one extra df groupBy + join + per-doc re-sort;
-    worth it exactly when the vocab is frequency-skewed. Word
-    n-grams (vocab >> docs) keep the free hash order.
-
-    ``"bitset"`` is the DENSE-REGIME strategy: when the shingle
-    vocabulary is small relative to the corpus (char n-grams over a
-    narrow alphabet: 2k distinct 5-grams across 5k docs here), EVERY
-    doc pair shares prefix shingles, so candidate generation is
-    provably ~all-pairs whatever the prefix order — the filter
-    machinery just adds overhead (measured: hash-order 152 s,
-    df-order 26 s at sf0.1). Instead docs block into groups and each
-    unordered block pair computes ALL exact intersection counts as
-    one float32 BLAS matmul inside applyInPandas (see
-    _bitset_jaccard_pairs) — same output, ~2 s. Honest scale
-    boundary: with vocab << docs and quadratic-dense candidates NO
-    exact algorithm is sublinear in pairs; the matmul kernel
-    minimizes the per-pair constant to a fused multiply-add. Real
-    100 TB text corpora have vocab >> docs, where prefix filtering
-    is the scale path.
+    PPJoin-style prefix filtering (hash or document-frequency shingle
+    order) was measured against this path on word 3-grams at sf0.1
+    (4 vCPU, cached shingles) and lost at t=0.35, 0.5 and 0.8 alike:
+    the extra verification pass costs more than the candidates it
+    prunes. In the dense regime (small vocab: char n-grams) every doc
+    pair shares shingles and this join goes quadratic; use
+    dense_jaccard_pairs there.
     """
-    sh = shingles if shingles is not None else doc_shingles(docs, text_col, n)
-    hs = hashed if hashed is not None else hashed_shingles(sh)
-    if strategy == "bitset":
-        try:
-            return _bitset_jaccard_pairs(hs, threshold)
-        except BitsetVocabGateExceeded:
-            # vocab outgrew the dense-regime gate (larger SF / wider
-            # alphabet): degrade to the exact df-ordered prefix path
-            # instead of failing — same output, sparse-regime cost
-            strategy = "prefix"
-            order = "df"
-    if strategy == "auto":
-        strategy = "prefix" if threshold >= 0.5 else "index"
-    if strategy == "index":
-        post = hs.select(
-            "doc_id", F.size("_hh").alias("nsh"), F.explode("_hh").alias("h")
-        )
-        a = post.select(
-            F.col("doc_id").alias("doc_a"), F.col("nsh").alias("_na"), "h"
-        )
-        b = post.select(
-            F.col("doc_id").alias("doc_b"), F.col("nsh").alias("_nb"), "h"
-        )
-        inter = (
-            a.join(b, "h")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            # size-ratio filter: jaccard>=t implies t*max(|a|,|b|) <= min
-            .filter(
-                (F.col("_na") >= F.lit(threshold) * F.col("_nb"))
-                & (F.col("_nb") >= F.lit(threshold) * F.col("_na"))
-            )
-            .groupBy("doc_a", "doc_b", "_na", "_nb")
-            .agg(F.count(F.lit(1)).alias("_ni"))
-        )
-        jac = inter.select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("_ni")
-                / (F.col("_na") + F.col("_nb") - F.col("_ni")).cast("double")
-            ).alias("jaccard"),
-        )
-        return jac.filter(F.col("jaccard") >= threshold)
-    if order == "df":
-        ex = hs.select("doc_id", F.explode("_hh").alias("h"))
-        dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
-        # plain join: AQE broadcasts iff the shingle vocab is actually
-        # small; word-gram vocabs are data-sized and must shuffle
-        resorted = (
-            ex.join(dfreq, "h")
-            .groupBy("doc_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("_df", "h"))
-                ).alias("_ord")
-            )
-        )
-        nsh = F.size("_ord")
-        plen = (nsh - F.ceil(F.lit(threshold) * nsh) + 1).cast("int")
-        prefix = resorted.select(
-            "doc_id",
-            nsh.alias("nsh"),
-            F.explode(
-                F.transform(F.slice("_ord", 1, plen), lambda x: x["h"])
-            ).alias("h"),
-        )
-    else:
-        nsh = F.size("_hh")
-        plen = (nsh - F.ceil(F.lit(threshold) * nsh) + 1).cast("int")
-        prefix = hs.select(
-            "doc_id",
-            nsh.alias("nsh"),
-            F.explode(F.slice("_hh", 1, plen)).alias("h"),
-        )
-    a = prefix.select(
-        F.col("doc_id").alias("doc_a"), "h", F.col("nsh").alias("_pna")
+    hs = _hashed(docs, text_col, n, shingles, hashed)
+    post = hs.select(
+        "doc_id", F.size("_hh").alias("nsh"), F.explode("_hh").alias("h")
     )
-    b = prefix.select(
-        F.col("doc_id").alias("doc_b"), "h", F.col("nsh").alias("_pnb")
+    a = post.select(
+        F.col("doc_id").alias("doc_a"), F.col("nsh").alias("_na"), "h"
     )
-    cand = (
+    b = post.select(
+        F.col("doc_id").alias("doc_b"), F.col("nsh").alias("_nb"), "h"
+    )
+    inter = (
         a.join(b, "h")
         .filter(F.col("doc_a") < F.col("doc_b"))
         # size-ratio filter: jaccard>=t implies t*max(|a|,|b|) <= min
         .filter(
-            (F.col("_pna") >= F.lit(threshold) * F.col("_pnb"))
-            & (F.col("_pnb") >= F.lit(threshold) * F.col("_pna"))
+            (F.col("_na") >= F.lit(threshold) * F.col("_nb"))
+            & (F.col("_nb") >= F.lit(threshold) * F.col("_na"))
         )
-        .select("doc_a", "doc_b")
-        .distinct()
+        .groupBy("doc_a", "doc_b", "_na", "_nb")
+        .agg(F.count(F.lit(1)).alias("_ni"))
     )
-    return _verify_jaccard(cand, hs, threshold)
+    return _jaccard_at_least(inter, threshold)
 
 
-def _bitset_jaccard_pairs(
-    hs: DataFrame, threshold: float, num_blocks: int = 8
-) -> DataFrame:
-    """Dense-regime exact Jaccard (see ngram_jaccard_pairs): block
-    outer-product over 0/1 doc-x-vocab matrices. Docs hash into
-    ``num_blocks`` blocks; every unordered block pair becomes one
-    applyInPandas task that materializes its two sub-matrices
-    (float32, exact for counts < 2^24) and computes ALL pairwise
-    intersections as one BLAS matmul — the per-pair cost collapses
-    to a fused multiply-add, ~100x below any row-at-a-time Spark
-    kernel (measured: per-row popcount verify 88 s, this ~2 s at
-    sf0.1; candidate-based variants are no better because the dense
-    regime makes candidates ~= all pairs).
+def dense_jaccard_pairs(hashed: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard pairs (doc_a, doc_b, jaccard), doc_a < doc_b, over
+    a hashed-shingle frame (doc_id, _hh) in the DENSE regime: a
+    shingle vocab small against the corpus, such as char n-grams over
+    a narrow alphabet (~2k distinct 5-grams across 5k docs at sf0.1).
+    There every doc pair shares shingles, so any candidate join is
+    ~all-pairs; instead docs hash into 8 blocks and every unordered
+    block pair becomes one applyInPandas task that materializes its two
+    0/1 doc-x-vocab sub-matrices (float32, exact for counts < 2^24)
+    and computes ALL pairwise intersections as one BLAS matmul — the
+    per-pair cost collapses to a fused multiply-add (measured 5.1 s at
+    sf0.1, against 166 s for df-ordered prefix filtering and 362 s for
+    the inverted index). No exact algorithm is sublinear in pairs
+    here; this one minimizes the per-pair constant.
 
     Distribution: each doc's (tiny) shingle-index list ships to its
-    B+1 task-sides — O(B * corpus_indexes) shuffle; tasks are
+    B+1 task-sides (B = 8 blocks) — O(B * corpus_indexes) shuffle; tasks are
     independent and numpy-bound. The vocab index collects once
-    (<= 2^16 gate, the collect-tiny-codebooks rule); per-task memory
-    is block_docs x vocab x 4 B. Pair (x, y) belongs to exactly one
-    unordered block pair, so output pairs are unique by
-    construction. jaccard = ni / (na + nb - ni) in float64 — the
-    identical IEEE division the SQL oracle performs."""
+    (the collect-tiny-codebooks rule); per-task memory is
+    block_docs x vocab x 4 B, so the kernel is gated at 2^16 distinct
+    shingles. Above the gate the result comes from ngram_jaccard_pairs'
+    inverted index: still exact, but slower than the df-ordered prefix
+    filter that used to serve it (362 s against 166 s at sf0.1 char
+    density). No registered input reaches the gate: the char 5-gram
+    vocab is 1,981 at sf0.01 and 2,041 at sf0.1. Pair (x, y) belongs
+    to exactly one unordered block pair, so output pairs are unique by
+    construction; jaccard is the same float64 division as
+    _jaccard_at_least."""
     import numpy as np
     import pandas as pd
 
+    num_blocks = 8
     # two consumers (vocab collect, per-doc index lists) — cache or
     # the whole shingle scan re-executes per branch
-    ex = hs.select("doc_id", F.explode("_hh").alias("h")).cache()
+    ex = hashed.select("doc_id", F.explode("_hh").alias("h")).cache()
     vocab = sorted(r["h"] for r in ex.select("h").distinct().collect())
-    n_vocab = len(vocab)
-    if n_vocab > 1 << 16:
+    nv = len(vocab)
+    if nv > 1 << 16:
         ex.unpersist()
-        raise BitsetVocabGateExceeded(
-            f"bitset strategy gated at 65536 distinct shingles "
-            f"(got {n_vocab}); use strategy='prefix' for sparse vocabs"
-        )
-    spark = hs.sparkSession
+        return ngram_jaccard_pairs(None, threshold=threshold, hashed=hashed)
+    spark = hashed.sparkSession
     vidx = spark.createDataFrame(
         [(h, i) for i, h in enumerate(vocab)], "h long, _i long"
     )
@@ -297,7 +214,6 @@ def _bitset_jaccard_pairs(
     ).select("ba", "bb", "doc_id", "_is", F.lit(1).alias("side"))
     both = left.unionAll(right)
     t = float(threshold)
-    nv = n_vocab
 
     empty = pd.DataFrame(
         {
@@ -397,25 +313,12 @@ def _verify_jaccard(
             F.size("_sb").alias("_nb"),
         )
     )
-    jac = staged.select(
-        "doc_a",
-        "doc_b",
-        (
-            F.col("_ni") / (F.col("_na") + F.col("_nb") - F.col("_ni")).cast("double")
-        ).alias("jaccard"),
-    )
-    return jac.filter(F.col("jaccard") >= threshold)
+    return _jaccard_at_least(staged, threshold)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    shingles: DataFrame | None = None,
-    hashed: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, sig: array<bigint>) minhash signatures.
+def minhash_signatures(hashed: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc_id, sig: array<bigint>) minhash signatures of a
+    hashed-shingle frame.
 
     h_i(shingle) = xxhash64(xxhash64(shingle), salt_i); sig[i] = min
     over the doc's distinct shingles. Re-hashing the 64-bit shingle
@@ -429,15 +332,7 @@ def minhash_signatures(
     # (A per-row transform() formulation looks cheaper but Catalyst's
     # projection collapse re-inlines the shingle array into all 64
     # lambdas when the input frame isn't cached — 30x slower.)
-    if hashed is not None:
-        hs = hashed  # docs may be None: signatures need only the hashes
-    else:
-        src = (
-            shingles if shingles is not None
-            else doc_shingles(docs, text_col, n)
-        )
-        hs = hashed_shingles(src)
-    post = hs.select("doc_id", F.explode("_hh").alias("h"))
+    post = hashed.select("doc_id", F.explode("_hh").alias("h"))
     aggs = [
         F.min(F.xxhash64("h", F.lit(i))).alias(f"_h{i}")
         for i in range(num_hashes)
@@ -452,32 +347,24 @@ def minhash_signatures(
     )
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    shingles: DataFrame | None = None,
-    hashed: DataFrame | None = None,
+def minhash_bands(
+    hashed: DataFrame, num_hashes: int = 64, bands: int = 16
 ) -> DataFrame:
-    """Near-dup pairs via MinHash+LSH banding, verified with exact
-    Jaccard (returns doc_a, doc_b, jaccard >= threshold).
-
-    rows-per-band r = num_hashes/bands; candidate iff some band's
-    signature slice matches exactly (hash-join on (band, band_hash)).
+    """(doc_id, band, bucket) LSH band buckets of each doc's minhash
+    signature: rows-per-band r = num_hashes/bands, and two docs are
+    candidates iff some band's signature slice matches exactly. The
+    batch (minhash_lsh_candidates) and incremental
+    (corpus.clean_corpus_incremental) curation paths both band here,
+    so they share one (num_hashes, bands) and stay equal.
     """
     r = num_hashes // bands
-    sigs = minhash_signatures(
-        docs, text_col, n, num_hashes, shingles=shingles, hashed=hashed
-    )
+    sigs = minhash_signatures(hashed, num_hashes)
     # bucket = xxhash64 of the band's r signature longs + the band id,
     # hashed directly (no string materialization — concat_ws of longs
     # costs more than the hash itself). Equal slices still collide
     # identically, so recall is unchanged; false collisions differ but
     # are removed by exact verification either way.
-    banded = sigs.select(
+    return sigs.select(
         "doc_id",
         F.explode(
             F.array(
@@ -497,6 +384,22 @@ def minhash_lsh_candidates(
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
+
+
+def minhash_lsh_candidates(
+    docs: DataFrame,
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+    shingles: DataFrame | None = None,
+    hashed: DataFrame | None = None,
+) -> DataFrame:
+    """Near-dup pairs via MinHash+LSH banding (minhash_bands), verified
+    with exact Jaccard (returns doc_a, doc_b, jaccard >= threshold);
+    candidates hash-join on (band, bucket).
+    """
+    hs = _hashed(docs, text_col, n, shingles, hashed)
+    banded = minhash_bands(hs)
     left = banded.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
     right = banded.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
     cand = (
@@ -509,8 +412,6 @@ def minhash_lsh_candidates(
     # arrays onto each candidate pair and intersect per-row (no
     # re-shuffle of the postings index; candidates are a small fraction
     # of pairs, and bigint intersects beat string intersects ~5x)
-    sh = shingles if shingles is not None else doc_shingles(docs, text_col, n)
-    hs = hashed if hashed is not None else hashed_shingles(sh)
     return _verify_jaccard(cand, hs, threshold)
 
 
@@ -890,13 +791,13 @@ def containment_pairs(
     here (tests/test_round9_fixes.py pins the split in both
     directions).
 
-    Same inverted-index shape as ngram_jaccard_pairs' "index"
-    strategy: explode distinct hashed shingles, self-join on the
-    hash, map-side-combining groupBy counts the intersection, sizes
-    join in at the end — one shuffle round, candidate pairs bounded
-    by shingle co-occurrence (never all-pairs). Integer basis points
-    make the threshold an exact int64 compare, so the cut replays
-    bit-for-bit in a SQL oracle.
+    Same inverted-index shape as ngram_jaccard_pairs (the
+    sparse-regime Jaccard path): explode distinct hashed shingles,
+    self-join on the hash, map-side-combining groupBy counts the
+    intersection, sizes join in at the end — one shuffle round,
+    candidate pairs bounded by shingle co-occurrence (never
+    all-pairs). Integer basis points make the threshold an exact
+    int64 compare, so the cut replays bit-for-bit in a SQL oracle.
 
     ``max_doc_freq`` is the 100 TB knob: a shingle occurring in F
     documents contributes F^2 join rows; stopword-like shingles

@@ -2354,26 +2354,25 @@ CHAR_JACCARD_SQL = f"""
 
 @register("char_jaccard_pairs", CHAR_JACCARD_SQL)
 def q_char_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-5-gram Jaccard near-dup pairs — same prefix-filtered
-    machinery as the word-gram variant, different shingle source.
-    Char vocab is tiny (2k distinct 5-grams over 5k docs), so the
-    DENSE regime applies — candidates ~= all pairs under ANY prefix
-    order (hash 152 s, PPJoin df-order 26 s at sf0.1). The bitset
-    strategy's block-matmul kernel is the honest dense algorithm
-    (~2 s, same exact output; regime boundary documented in
-    ngram_jaccard_pairs). If the vocab ever outgrows the 2^16 dense
-    gate at larger SF, the operator degrades to the exact df-ordered
-    prefix path instead of failing (r8 ADVICE fix)."""
+    """Character-5-gram Jaccard near-dup pairs via the dense path.
+
+    The char vocab is tiny (~2k distinct 5-grams over 5k docs at
+    sf0.1), so every doc pair shares shingles and dense_jaccard_pairs'
+    block matmul is the exact path (5.1 s at sf0.1, against 362 s for
+    ngram_jaccard_pairs' inverted index on the same shingles). Above
+    its 2^16-vocab gate it falls back to that inverted index, still
+    exact."""
     from defimap_data_pipelines_spark.functions.text import char_shingles
-    from defimap_data_pipelines_spark.operators.dedup import ngram_jaccard_pairs
+    from defimap_data_pipelines_spark.operators.dedup import (
+        dense_jaccard_pairs,
+        hashed_shingles,
+    )
 
     docs = read_table(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id", char_shingles(F.col("text"), 5).alias("_sh")
     )
-    return ngram_jaccard_pairs(
-        docs, threshold=0.5, shingles=sh, strategy="bitset"
-    )
+    return dense_jaccard_pairs(hashed_shingles(sh), threshold=0.5)
 
 
 ABOVE_AVG_SQL = """

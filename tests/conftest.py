@@ -51,10 +51,7 @@ SLOW_TESTS = {
     "tests/test_incremental.py::test_incremental_tvl_equals_batch",
     "tests/test_operators.py::test_degenerate_inputs",
     "tests/test_oracle_parity.py::test_no_decimal_columns_in_any_oracle_output",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[ann_recall_eval]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[lsh_topk]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[markov_attribution]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[training_dataset]",
     "tests/test_pipelines.py::test_run_curation_demo",
     "tests/test_properties.py::test_holt_matches_plain_recursion",
     "tests/test_properties.py::test_jaccard_strategies_agree",

@@ -289,26 +289,36 @@ def test_degenerate_inputs(spark):
     partitions, and sub-n-token documents."""
     import pandas as pd
     from defimap_data_pipelines_spark.operators.dedup import (
+        dense_jaccard_pairs,
+        doc_shingles,
         exact_dedup,
+        hashed_shingles,
         ngram_jaccard_pairs,
     )
     from defimap_data_pipelines_spark.operators.textops import text_stats
+
+    def both_paths(docs, threshold):
+        hs = hashed_shingles(doc_shingles(docs))
+        return (
+            ngram_jaccard_pairs(docs, threshold=threshold),
+            dense_jaccard_pairs(hs, threshold),
+        )
 
     # empty documents frame -> empty outputs, schemas intact
     empty = spark.createDataFrame([], "doc_id bigint, text string")
     assert exact_dedup(empty).count() == 0
     assert text_stats(empty).count() == 0
-    for strat in ("index", "prefix"):
-        assert ngram_jaccard_pairs(empty, strategy=strat).count() == 0
+    for pairs in both_paths(empty, 0.5):
+        assert pairs.count() == 0
 
     # documents shorter than the shingle width still produce one shingle
     tiny = spark.createDataFrame(
         [(1, "one two"), (2, "one two"), (3, "unrelated text here")],
         "doc_id bigint, text string",
     )
-    for strat in ("index", "prefix"):
-        pairs = ngram_jaccard_pairs(tiny, threshold=0.5, strategy=strat).collect()
-        assert [(r.doc_a, r.doc_b, r.jaccard) for r in pairs] == [(1, 2, 1.0)]
+    for pairs in both_paths(tiny, 0.5):
+        got = [(r.doc_a, r.doc_b, r.jaccard) for r in pairs.collect()]
+        assert got == [(1, 2, 1.0)]
 
     # all-NULL interpolation column stays NULL; single-row partition keeps
     # its value

@@ -131,23 +131,30 @@ _doc_texts = st.lists(
 @settings(max_examples=8, deadline=None)
 @given(_doc_texts, st.sampled_from([0.3, 0.5, 0.7]))
 def test_jaccard_strategies_agree(spark, texts, threshold):
-    """The index and prefix strategies of ngram_jaccard_pairs return
-    identical (doc_a, doc_b, jaccard) sets on arbitrary corpora — the
-    prefix filter is an exact optimization, not an approximation."""
-    from defimap_data_pipelines_spark.operators.dedup import ngram_jaccard_pairs
+    """ngram_jaccard_pairs' inverted index and dense_jaccard_pairs'
+    block matmul return identical (doc_a, doc_b, jaccard) sets on
+    arbitrary corpora — both are exact, not approximations."""
+    from defimap_data_pipelines_spark.operators.dedup import (
+        dense_jaccard_pairs,
+        doc_shingles,
+        hashed_shingles,
+        ngram_jaccard_pairs,
+    )
 
     docs = spark.createDataFrame(
         pd.DataFrame(
             [(i, t) for i, t in enumerate(texts)], columns=["doc_id", "text"]
         )
     )
-    got = {}
-    for strat in ("index", "prefix"):
-        rows = ngram_jaccard_pairs(
-            docs, threshold=threshold, strategy=strat
-        ).collect()
-        got[strat] = sorted((r.doc_a, r.doc_b, r.jaccard) for r in rows)
-    assert got["index"] == got["prefix"]
+    hs = hashed_shingles(doc_shingles(docs))
+    got = {
+        name: sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
+        for name, df in (
+            ("index", ngram_jaccard_pairs(docs, threshold=threshold)),
+            ("dense", dense_jaccard_pairs(hs, threshold)),
+        )
+    }
+    assert got["index"] == got["dense"]
 
 
 @settings(max_examples=8, deadline=None)

@@ -202,34 +202,32 @@ def test_k_anonymity_hand_counts(spark):
 
 
 def test_jaccard_strategies_agree(spark, sf_dir):
-    """Differential: bitset (dense matmul), prefix (hash order),
-    prefix (df order) and index strategies must produce identical
-    pair sets with identical jaccard values on the same corpus."""
+    """Differential: the dense block-matmul path and the inverted-index
+    path must produce identical pair sets with identical jaccard
+    values on the same (char-shingle) corpus."""
     from defimap_data_pipelines_spark.functions.text import char_shingles
     from defimap_data_pipelines_spark.operators.dedup import (
+        dense_jaccard_pairs,
+        hashed_shingles,
         ngram_jaccard_pairs,
     )
     from defimap_data_pipelines_spark.sources.parquet import read_table
 
     docs = read_table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", char_shingles(F.col("text"), 5).alias("_sh")
+    hs = hashed_shingles(
+        docs.select("doc_id", char_shingles(F.col("text"), 5).alias("_sh"))
     ).cache()
 
-    def run(**kw):
+    def pairs(df):
         return {
             (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9)
-            for r in ngram_jaccard_pairs(
-                docs, threshold=0.5, shingles=sh, **kw
-            ).collect()
+            for r in df.collect()
         }
 
-    bitset = run(strategy="bitset")
-    prefix_hash = run(strategy="prefix")
-    prefix_df = run(strategy="prefix", order="df")
-    index = run(strategy="index")
-    assert bitset == prefix_hash == prefix_df == index
-    assert len(bitset) > 0  # the corpus plants near-dups
+    dense = pairs(dense_jaccard_pairs(hs, threshold=0.5))
+    index = pairs(ngram_jaccard_pairs(docs, threshold=0.5, hashed=hs))
+    assert dense == index
+    assert len(dense) > 0  # the corpus plants near-dups
 
 
 def test_char_shingles_linear_form_matches_python(spark):

@@ -234,31 +234,31 @@ def test_levenshtein_length_contract(spark):
 
 
 def test_char_jaccard_bitset_falls_back_when_vocab_gate_trips(spark):
-    """ngram_jaccard_pairs(strategy='bitset') must degrade to the
-    exact prefix path instead of raising when the distinct-shingle
-    vocab exceeds 2^16 (ADVICE low #1)."""
+    """dense_jaccard_pairs must return the exact inverted-index result
+    instead of raising when the distinct-shingle vocab exceeds 2^16
+    (ADVICE low #1)."""
     from defimap_data_pipelines_spark.operators.dedup import (
-        ngram_jaccard_pairs,
+        dense_jaccard_pairs,
     )
 
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    n_vocab = (1 << 16) + 8
-    # two identical docs sharing a huge vocab + one disjoint doc
-    h_all = list(range(n_vocab))
-    hs = spark.createDataFrame(
-        [
-            (1, h_all),
-            (2, h_all),
-            (3, [10_000_000 + i for i in range(50)]),
-        ],
-        "doc_id long, _hh array<long>",
-    )
-    docs = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b")], "doc_id long, text string"
-    )
-    out = ngram_jaccard_pairs(
-        docs, threshold=0.5, hashed=hs, strategy="bitset"
-    ).collect()
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        n_vocab = (1 << 16) + 8
+        # two identical docs sharing a huge vocab + one disjoint doc
+        h_all = list(range(n_vocab))
+        hs = spark.createDataFrame(
+            [
+                (1, h_all),
+                (2, h_all),
+                (3, [10_000_000 + i for i in range(50)]),
+            ],
+            "doc_id long, _hh array<long>",
+        )
+        out = dense_jaccard_pairs(hs, threshold=0.5).collect()
+    finally:
+        spark.conf.set(key, before)
     assert {(r["doc_a"], r["doc_b"]) for r in out} == {(1, 2)}
     assert out[0]["jaccard"] == pytest.approx(1.0, abs=1e-12)
 

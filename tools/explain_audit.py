@@ -23,15 +23,36 @@ from defimap_data_pipelines_spark.session import get_spark
 from defimap_data_pipelines_spark.plans.queries import QUERIES
 
 
-def summarize(name: str, spark, sf_dir: str) -> str:
-    df = QUERIES[name](spark, sf_dir)
-    # execute first: AQE's pre-execution plan string has no codegen
-    # spans and no final shuffle decisions (isFinalPlan=false)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # keep only the final adaptive plan — the trailing "Initial Plan"
-    # section would double-count exchanges/joins
-    plan = plan.split("== Initial Plan ==")[0]
+def outer_plan(plan: str) -> str:
+    """The query's own final plan, cut from an executed-plan string.
+
+    Drops the trailing AQE "Initial Plan" section, which would
+    double-count exchanges/joins, and each ``InMemoryRelation``'s
+    subtree: the plan its cached frame was built with, whose printed
+    form depends on what ran earlier in the session (one query read 3
+    exchanges alone and 2 after others). Nested AQE plans print their
+    headers at columns left of the relation, so a subtree is bounded by
+    its tree connectors instead: it ends at the next line that carries
+    the relation's ancestor connectors up to its last pending sibling
+    (``:``) and starts that sibling there.
+    """
+    kept, end = [], None
+    for line in plan.splitlines():
+        if end is not None:
+            p, head = end
+            if line[:p] != head or line[p:p + 2] not in (":-", "+-"):
+                continue
+            end = None
+        if "InMemoryRelation" in line:
+            pre = line[: line.index("InMemoryRelation")]
+            p = max(pre.rfind(":"), 0)
+            end = (p, pre[:p])
+        kept.append(line)
+    return "\n".join(kept).split("== Initial Plan ==")[0]
+
+
+def summary_line(name: str, plan: str) -> str:
+    plan = outer_plan(plan)
     # match within one line only: Spark truncates long plan lines, which
     # can swallow the closing '>' and make a greedy match overrun
     scans = re.findall(r"ReadSchema: struct<([^\n>]*)", plan)
@@ -44,6 +65,14 @@ def summarize(name: str, spark, sf_dir: str) -> str:
         f"codegen={len(codegen_ids)} "
         f"scan_widths={widths}"
     )
+
+
+def summarize(name: str, spark, sf_dir: str) -> str:
+    df = QUERIES[name](spark, sf_dir)
+    # execute first: AQE's pre-execution plan string has no codegen
+    # spans and no final shuffle decisions (isFinalPlan=false)
+    df.collect()
+    return summary_line(name, df._jdf.queryExecution().executedPlan().toString())
 
 
 def committed_exchange_counts() -> dict[str, int]:

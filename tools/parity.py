@@ -5,7 +5,9 @@ given SF dir, then compares row count, column names/dtypes, and exact
 values (rows sorted by all columns, columns sorted by name) — mirroring
 the driver's order-insensitive value hash. Each query runs once; its
 Spark collect is timed and the seconds are printed beside its verdict,
-with their sum on the final line. A query that raises counts as a
+with their sum on the final line. Before the sweep the first listed
+query runs once, untimed and unprinted, so session and JIT start-up
+are not charged to it. A query that raises counts as a
 mismatch and the sweep carries on; the exit code is 1 on any mismatch.
 
 Usage: python tools/parity.py [--vanilla] [--window] [sf_dir] [query ...]
@@ -182,6 +184,15 @@ def check(name: str, spark, con, sf_dir: str) -> tuple[bool, float]:
         return False, 0.0
 
 
+def warm_up(name: str, spark, sf_dir: str) -> None:
+    """Run ``name`` once, untimed; a raising query is left for the
+    sweep to report."""
+    try:
+        QUERIES[name](spark, sf_dir).toPandas()
+    except Exception:
+        pass
+
+
 def vanilla_spark():
     """A driver-like session: default configs, no engine overrides.
 
@@ -218,6 +229,7 @@ def main() -> int:
         names = argv[1:] or list(QUERIES)
     spark = vanilla_spark() if use_vanilla else get_spark("parity")
     con = duck_connect(sf_dir)
+    warm_up(names[0], spark, sf_dir)
     results = [check(n, spark, con, sf_dir) for n in names]
     matched = sum(ok for ok, _ in results)
     total = sum(secs for _, secs in results)

@@ -71,7 +71,7 @@ DEFAULT_QUERIES = [
     "minhash_lsh_dedup",      # banded LSH near-dup
     "simhash_pairs",          # pigeonhole Hamming blocks
     "containment_dups",       # shingle inverted index
-    "ngram_jaccard_pairs",    # prefix-filtered index
+    "ngram_jaccard_pairs",    # shingle inverted index (Jaccard)
     "lsh_topk",               # hyperplane-LSH ANN
     "training_dataset",       # end-to-end curation
     "salted_join_agg",        # skew-salted join path
