@@ -783,64 +783,62 @@ def degree_assortativity(
     """Degree assortativity coefficient (Newman 2002): the Pearson
     correlation of (deg(u), deg(v)) over the symmetrized edge list —
     one number saying whether hubs attach to hubs (> 0) or to leaves
-    (< 0). Returns a single row (m_edges, r).
+    (< 0). Returns a single row (m_edges, r). An edge with a null
+    endpoint is not an edge: it is dropped before the degree count.
 
     All six sufficient statistics (M, sum j, sum k, sum jk, sum j^2,
-    sum k^2) are exact int64 aggregates; the coefficient combines
+    sum k^2) are exact integer aggregates; the coefficient combines
     them in double on the O(1) scalar row — deterministic cross-engine
-    because IEEE ops on identical inputs round identically. Shape:
-    one degree groupBy + two hash joins of the degree frame onto the
-    edge list + one global agg; no windows, no iteration.
+    because IEEE ops on identical inputs round identically. Over the
+    symmetrized list M = sum_v d_v, sum j = sum k = sum_v d_v^2 and
+    sum j^2 = sum k^2 = sum_v d_v^3, so those four come from the degree
+    frame alone; only sum jk = 2 sum_(u,v) d_u d_v needs the edges.
+    Shape: one degree groupBy over both endpoint columns + two hash
+    joins of the degree frame onto the un-doubled edge list + one
+    global agg over the degree rows and the joined edge rows together;
+    no windows, no iteration.
     """
-    # sym feeds the edge-list join AND the degree count (and deg
-    # itself joins twice): cache so the upstream edge construction
-    # runs once, not once per consumer.
-    sym = edges.select(src, dst).unionByName(
-        edges.select(F.col(dst).alias(src), F.col(src).alias(dst))
-    ).cache()
-    deg = sym.groupBy(src).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
+    e = edges.select(src, dst).dropna()
+    deg = (
+        e.select(F.col(src).alias("_n"))
+        .unionByName(e.select(F.col(dst).alias("_n")))
+        .groupBy("_n")
+        .agg(F.count(F.lit(1)).cast("long").alias("d"))
     )
-    ju = deg.select(F.col(src).alias("_u"), F.col("deg").alias("j"))
-    kv = deg.select(F.col(src).alias("_v"), F.col("deg").alias("k"))
-    # headroom (r8): over edges, sum(j) = sum_v d_v^2 (rows-squared)
-    # and sum(j^2) = sum_v d_v^3 (rows-CUBED — a 2e6-degree hub wraps
-    # an int64 cube if SUMMED in int64); all five degree sums
-    # accumulate in decimal(38,0) (oracle: HUGEINT). The PER-ROW
-    # products stay int64 — j*k wraps only past a ~3e9-degree hub,
+    ju = deg.select(F.col("_n").alias("_u"), F.col("d").alias("j"))
+    kv = deg.select(F.col("_n").alias("_v"), F.col("d").alias("k"))
+    jk = (
+        e.join(ju, e[src] == ju["_u"])
+        .join(kv, e[dst] == kv["_v"])
+        .select((F.col("j") * F.col("k")).alias("jk"))
+    )
+    # headroom (r8): sum_v d_v^3 is rows-CUBED — a 2e6-degree hub
+    # wraps an int64 cube — so the cube is formed in decimal(38,0)
+    # and every sum accumulates there (oracle: HUGEINT). The squares
+    # d*d and j*k stay int64 — they wrap only past a ~3e9-degree hub,
     # at which point that node owns 3e9 edges — and cast to decimal
     # at the sum (the gini pattern: a cast is far cheaper per row
-    # than a decimal multiply; measured 5.3 s -> ~3 s at sf0.1).
+    # than a decimal multiply).
+    dec = "decimal(38,0)"
+    none = F.lit(None).cast("long")
+    d2 = F.col("d") * F.col("d")
     stats = (
-        sym.join(ju, sym[src] == ju["_u"])
-        .join(kv, sym[dst] == kv["_v"])
+        deg.select("d", none.alias("jk"))
+        .unionByName(jk.select(none.alias("d"), "jk"))
         .agg(
-            F.count(F.lit(1)).cast("long").alias("m"),
-            F.sum(F.col("j").cast("decimal(38,0)")).alias("sj"),
-            F.sum(F.col("k").cast("decimal(38,0)")).alias("sk"),
-            F.sum(
-                (F.col("j") * F.col("k")).cast("decimal(38,0)")
-            ).alias("sjk"),
-            F.sum(
-                (F.col("j") * F.col("j")).cast("decimal(38,0)")
-            ).alias("sj2"),
-            F.sum(
-                (F.col("k") * F.col("k")).cast("decimal(38,0)")
-            ).alias("sk2"),
+            F.coalesce(F.sum("d"), F.lit(0).cast("long")).alias("m_edges"),
+            F.sum(d2.cast(dec)).alias("sj"),
+            F.sum(d2.cast(dec) * F.col("d").cast(dec)).alias("sj2"),
+            (F.sum(F.col("jk").cast(dec)) * 2).alias("sjk"),
         )
     )
-    num = F.col("m").cast("double") * F.col("sjk").cast(
-        "double"
-    ) - F.col("sj").cast("double") * F.col("sk").cast("double")
-    den_j = F.col("m").cast("double") * F.col("sj2").cast(
-        "double"
-    ) - F.col("sj").cast("double") * F.col("sj").cast("double")
-    den_k = F.col("m").cast("double") * F.col("sk2").cast(
-        "double"
-    ) - F.col("sk").cast("double") * F.col("sk").cast("double")
+    m, sj, sj2, sjk = (
+        F.col(c).cast("double") for c in ("m_edges", "sj", "sj2", "sjk")
+    )
+    den = m * sj2 - sj * sj  # the j and k variances are equal
     return stats.select(
-        F.col("m").alias("m_edges"),
-        F.round(num / F.sqrt(den_j * den_k), 9).alias("r"),
+        "m_edges",
+        F.round((m * sjk - sj * sj) / F.sqrt(den * den), 9).alias("r"),
     )
 
 

@@ -12,7 +12,11 @@ from __future__ import annotations
 import hashlib
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType
 
 TESTDATA_TABLES = [
     "region",
@@ -34,11 +38,61 @@ def dir_tag(path: str) -> str:
     return hashlib.md5(path.rstrip("/").encode()).hexdigest()[:10]
 
 
+def _spark_reads_as_arrow(t: pa.DataType) -> bool:
+    """True unless ``t`` (or a field nested in it) is one Spark reads
+    back as a different type than ``from_arrow_type`` maps it to:
+    nanosecond timestamps (a nested one reads as long; INT96 storage
+    reads as timestamp), durations (long) and nulls (int)."""
+    if pa.types.is_nested(t):
+        return all(_spark_reads_as_arrow(t.field(i).type) for i in range(t.num_fields))
+    return not (
+        (pa.types.is_timestamp(t) and t.unit == "ns")
+        or pa.types.is_duration(t)
+        or pa.types.is_null(t)
+    )
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The schema Spark infers for one parquet file under
+    ``nanosAsLong`` and ``inferTimestampNTZ=false``, read from the
+    file's footer instead of by a Spark job; None where the footer
+    holds a type this mapping does not settle."""
+    parquet = pq.read_metadata(path).schema
+    int64 = {
+        parquet.column(i).path
+        for i in range(len(parquet))
+        if parquet.column(i).physical_type == "INT64"
+    }
+    fields = []
+    for f in parquet.to_arrow_schema():
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns" and f.name in int64:
+            spark_type = LongType()  # as nanosAsLong reads it
+        elif not _spark_reads_as_arrow(f.type):
+            return None
+        else:
+            try:
+                spark_type = from_arrow_type(f.type, prefer_timestamp_ntz=False)
+            except TypeError:  # unsigned ints
+                return None
+        fields.append(StructField(f.name, spark_type, f.nullable))
+    return StructType(fields)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table from a scale-factor directory.
 
     Supports both the driver's single-file layout (``{name}.parquet``)
     and a partitioned-directory layout (``{name}/``).
+
+    A single file is read with the schema its parquet footer gives
+    (pyarrow's ``read_metadata`` mapped by ``from_arrow_type``), so the
+    read starts no Spark job; letting Spark infer it costs one job per
+    call. The footer rule reproduces Spark's inference:
+    ``timestamp[ns]`` maps to long, as ``nanosAsLong`` reads it, and
+    other timestamps map to TIMESTAMP. A footer type the mapping does
+    not settle (unsigned ints, INT96 or nested nanosecond timestamps,
+    durations, null columns) falls back to Spark's inference, as does
+    the partitioned-directory layout.
 
     Nanosecond parquet timestamps (events.ts) are unreadable by Spark 4
     by default; we read them as long via the legacy conf and convert to
@@ -52,9 +106,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # if the calling session's timezone isn't UTC
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     single = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(
-        single if os.path.exists(single) else os.path.join(sf_dir, name)
-    )
+    path = single if os.path.exists(single) else os.path.join(sf_dir, name)
+    schema = _footer_schema(path) if os.path.isfile(path) else None
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 

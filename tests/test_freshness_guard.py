@@ -94,3 +94,28 @@ def test_manifest_covers_registry():
         if n not in manifest and n not in set(_DRIVER_WINDOW)
     ]
     assert not holes, holes
+
+
+def test_restamp_warms_up_before_the_first_check(monkeypatch, tmp_path):
+    """Session start-up lands in an untimed warm-up run of the first
+    drifted query, not in that query's check."""
+    import types
+
+    fresh = _load_freshness()
+    calls = []
+    parity = types.SimpleNamespace(
+        ORACLE={"a": "", "b": ""},
+        duck_connect=lambda sf_dir: None,
+        warm_up=lambda name, spark, sf_dir: calls.append(("warm_up", name)),
+        check=lambda name, spark, con, sf_dir: (
+            calls.append(("check", name)) or (True, 0.0)
+        ),
+    )
+    monkeypatch.setattr(fresh, "_load_parity", lambda: parity)
+    monkeypatch.setattr(fresh, "fingerprints", lambda: {"a": "fa", "b": "fb"})
+    monkeypatch.setattr(fresh, "MANIFEST", tmp_path / "manifest.json")
+    monkeypatch.setattr(
+        "defimap_data_pipelines_spark.session.get_spark", lambda *a: None
+    )
+    assert fresh.restamp("sf", 14) == (["a", "b"], [])
+    assert calls == [("warm_up", "a"), ("check", "a"), ("check", "b")]

@@ -268,6 +268,52 @@ class TestAssortativity:
         assert row["m_edges"] == 6  # symmetrized
         assert row["r"] == -1.0
 
+    @staticmethod
+    def _six_sums(e):
+        """Reference: all six sums over the symmetrized edge list."""
+        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+        ju = deg.select(F.col("u").alias("_u"), F.col("deg").alias("j"))
+        kv = deg.select(F.col("u").alias("_v"), F.col("deg").alias("k"))
+        dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+        j, k = F.col("j"), F.col("k")
+        s = (
+            sym.join(ju, sym["u"] == ju["_u"])
+            .join(kv, sym["v"] == kv["_v"])
+            .agg(
+                F.count(F.lit(1)).alias("m"),
+                F.sum(dec(j)).alias("sj"),
+                F.sum(dec(k)).alias("sk"),
+                F.sum(dec(j * k)).alias("sjk"),
+                F.sum(dec(j * j)).alias("sj2"),
+                F.sum(dec(k * k)).alias("sk2"),
+            )
+        )
+        m, sj, sk, sjk, sj2, sk2 = (
+            F.col(c).cast("double") for c in ("m", "sj", "sk", "sjk", "sj2", "sk2")
+        )
+        r = (m * sjk - sj * sk) / F.sqrt((m * sj2 - sj * sj) * (m * sk2 - sk * sk))
+        return s.select(F.col("m").alias("m_edges"), F.round(r, 9).alias("r"))
+
+    def test_matches_six_sum_formulation(self, spark):
+        """A hub, a duplicate edge and a self-loop: the degree-frame
+        sums give the six-sum row exactly; a null-endpoint edge is
+        dropped."""
+        from defimap_data_pipelines_spark.operators.graph import (
+            degree_assortativity,
+        )
+
+        rows = [(0, 1), (0, 2), (0, 3), (0, 4), (0, 5), (1, 2), (1, 2),
+                (3, 3), (4, 5), (5, 6), (6, 7)]
+        e = spark.createDataFrame(rows, "u long, v long")
+        want = self._six_sums(e).collect()
+        assert want[0]["m_edges"] == 22 and want[0]["r"] is not None
+        assert degree_assortativity(e).collect() == want
+        with_nulls = spark.createDataFrame(
+            rows + [(None, 1), (2, None), (None, None)], "u long, v long"
+        )
+        assert degree_assortativity(with_nulls).collect() == want
+
 
 class TestWinnowing:
     def test_matches_python_reimplementation(self, spark):

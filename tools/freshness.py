@@ -190,15 +190,20 @@ def load_manifest() -> dict:
     return {}
 
 
-def restamp(sf_dir: str, round_no: int) -> tuple[list[str], list[str]]:
-    """Re-validate every drifted oracle-backed query against its
-    DuckDB oracle at ``sf_dir`` and stamp the matches with their
-    current fingerprint. Returns (stamped, mismatched)."""
+def _load_parity():
     spec = importlib.util.spec_from_file_location(
         "parity", Path(__file__).resolve().parent / "parity.py"
     )
     parity = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(parity)
+    return parity
+
+
+def restamp(sf_dir: str, round_no: int) -> tuple[list[str], list[str]]:
+    """Re-validate every drifted oracle-backed query against its
+    DuckDB oracle at ``sf_dir`` and stamp the matches with their
+    current fingerprint. Returns (stamped, mismatched)."""
+    parity = _load_parity()
     from defimap_data_pipelines_spark.session import get_spark
 
     fps = fingerprints()
@@ -210,6 +215,9 @@ def restamp(sf_dir: str, round_no: int) -> tuple[list[str], list[str]]:
     ]
     spark = get_spark("parity")
     con = parity.duck_connect(sf_dir)
+    if drifted:
+        # absorb session start-up outside the first drifted query's check
+        parity.warm_up(drifted[0], spark, sf_dir)
     stamped, mismatched = [], []
     for name in drifted:
         ok, _ = parity.check(name, spark, con, sf_dir)
