@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.functions.text import fingerprint, word_shingles
 from defimap_data_pipelines_spark.operators.cachereg import pin
+from defimap_data_pipelines_spark.operators.similarity import block_pairs
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -158,8 +159,8 @@ def dense_jaccard_pairs(hashed: DataFrame, threshold: float) -> DataFrame:
     shingle vocab small against the corpus, such as char n-grams over
     a narrow alphabet (~2k distinct 5-grams across 5k docs at sf0.1).
     There every doc pair shares shingles, so any candidate join is
-    ~all-pairs; instead docs hash into 8 blocks and every unordered
-    block pair becomes one applyInPandas task that materializes its two
+    ~all-pairs; instead the ``block_pairs`` scaffold gives each
+    unordered pair of 8 doc blocks one task that materializes its two
     0/1 doc-x-vocab sub-matrices (float32, exact for counts < 2^24)
     and computes ALL pairwise intersections as one BLAS matmul — the
     per-pair cost collapses to a fused multiply-add (measured 5.1 s at
@@ -167,23 +168,17 @@ def dense_jaccard_pairs(hashed: DataFrame, threshold: float) -> DataFrame:
     the inverted index). No exact algorithm is sublinear in pairs
     here; this one minimizes the per-pair constant.
 
-    Distribution: each doc's (tiny) shingle-index list ships to its
-    B+1 task-sides (B = 8 blocks) — O(B * corpus_indexes) shuffle; tasks are
-    independent and numpy-bound. The vocab index collects once
-    (the collect-tiny-codebooks rule); per-task memory is
-    block_docs x vocab x 4 B, so the kernel is gated at 2^16 distinct
-    shingles. Above the gate the result comes from ngram_jaccard_pairs'
-    inverted index: still exact, but slower than the df-ordered prefix
-    filter that used to serve it (362 s against 166 s at sf0.1 char
-    density). No registered input reaches the gate: the char 5-gram
-    vocab is 1,981 at sf0.01 and 2,041 at sf0.1. Pair (x, y) belongs
-    to exactly one unordered block pair, so output pairs are unique by
-    construction; jaccard is the same float64 division as
+    The vocab index collects once (the collect-tiny-codebooks rule);
+    per-task memory is block_docs x vocab x 4 B, so the kernel is
+    gated at 2^16 distinct shingles. Above the gate the result comes
+    from ngram_jaccard_pairs' inverted index: still exact, but slower
+    than the df-ordered prefix filter that used to serve it (362 s
+    against 166 s at sf0.1 char density). No registered input reaches
+    the gate: the char 5-gram vocab is 1,981 at sf0.01 and 2,041 at
+    sf0.1. jaccard is the same float64 division as
     _jaccard_at_least."""
     import numpy as np
-    import pandas as pd
 
-    num_blocks = 8
     # two consumers (vocab collect, per-doc index lists) — cache or
     # the whole shingle scan re-executes per branch
     ex = hashed.select("doc_id", F.explode("_hh").alias("h")).cache()
@@ -192,91 +187,32 @@ def dense_jaccard_pairs(hashed: DataFrame, threshold: float) -> DataFrame:
     if nv > 1 << 16:
         ex.unpersist()
         return ngram_jaccard_pairs(None, threshold=threshold, hashed=hashed)
-    spark = hashed.sparkSession
-    vidx = spark.createDataFrame(
+    # the lazy result reads it: held in the session's bounded store
+    pin(ex)
+    vidx = hashed.sparkSession.createDataFrame(
         [(h, i) for i, h in enumerate(vocab)], "h long, _i long"
     )
     per = (
         ex.join(F.broadcast(vidx), "h")
         .groupBy("doc_id")
         .agg(F.collect_list("_i").alias("_is"))
-        .withColumn("blk", F.pmod(F.col("doc_id"), F.lit(num_blocks)))
-    )
-    tasks = spark.createDataFrame(
-        [(i, j) for i in range(num_blocks) for j in range(i, num_blocks)],
-        "ba long, bb long",
-    )
-    left = tasks.join(
-        per, per["blk"] == tasks["ba"]
-    ).select("ba", "bb", "doc_id", "_is", F.lit(0).alias("side"))
-    right = tasks.join(
-        per, per["blk"] == tasks["bb"]
-    ).select("ba", "bb", "doc_id", "_is", F.lit(1).alias("side"))
-    both = left.unionAll(right)
-    t = float(threshold)
-
-    empty = pd.DataFrame(
-        {
-            "doc_a": pd.Series(dtype="int64"),
-            "doc_b": pd.Series(dtype="int64"),
-            "jaccard": pd.Series(dtype="float64"),
-        }
     )
 
-    def _kern(key, pdf):
-        ba, bb = key
+    def mat(rows) -> np.ndarray:
+        m = np.zeros((len(rows), nv), dtype=np.float32)
+        for r_, idxs in enumerate(rows):
+            m[r_, np.asarray(idxs, dtype=np.int64)] = 1.0
+        return m
 
-        def mat(side: pd.DataFrame):
-            ids = side["doc_id"].to_numpy()
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            rows = side["_is"].to_numpy()[order]
-            m = np.zeros((len(ids), nv), dtype=np.float32)
-            for r_, idxs in enumerate(rows):
-                m[r_, np.asarray(idxs, dtype=np.int64)] = 1.0
-            return ids, m
+    def score(lm, rm, ii, jj):
+        ni = (lm @ rm.T).astype(np.int64)[ii, jj]
+        na = lm.sum(axis=1).astype(np.int64)[ii]
+        nb = rm.sum(axis=1).astype(np.int64)[jj]
+        return ni / (na + nb - ni).astype(np.float64)
 
-        # a cross-block task can arrive one-sided when the other
-        # block holds no docs (tiny corpora) — no pairs to emit
-        if (pdf["side"] == 0).sum() == 0 or (pdf["side"] == 1).sum() == 0:
-            return empty
-        if ba == bb:
-            ids, m = mat(pdf[pdf["side"] == 0])
-            inter = (m @ m.T).astype(np.int64)
-            sizes = m.sum(axis=1).astype(np.int64)
-            ii, jj = np.triu_indices(len(ids), k=1)
-            ia, ib, ni = ids[ii], ids[jj], inter[ii, jj]
-            na, nb = sizes[ii], sizes[jj]
-        else:
-            ids_l, ml = mat(pdf[pdf["side"] == 0])
-            ids_r, mr = mat(pdf[pdf["side"] == 1])
-            inter = (ml @ mr.T).astype(np.int64)
-            sl = ml.sum(axis=1).astype(np.int64)
-            sr = mr.sum(axis=1).astype(np.int64)
-            ii, jj = np.meshgrid(
-                np.arange(len(ids_l)), np.arange(len(ids_r)),
-                indexing="ij",
-            )
-            ii, jj = ii.ravel(), jj.ravel()
-            il, ir = ids_l[ii], ids_r[jj]
-            # global doc_a < doc_b orientation
-            ia = np.minimum(il, ir)
-            ib = np.maximum(il, ir)
-            ni = inter[ii, jj]
-            na = np.where(il < ir, sl[ii], sr[jj])
-            nb = np.where(il < ir, sr[jj], sl[ii])
-        jac = ni / (na + nb - ni).astype(np.float64)
-        keep = jac >= t
-        return pd.DataFrame(
-            {
-                "doc_a": ia[keep],
-                "doc_b": ib[keep],
-                "jaccard": jac[keep],
-            }
-        )
-
-    return both.groupBy("ba", "bb").applyInPandas(
-        _kern, "doc_a long, doc_b long, jaccard double"
+    return block_pairs(
+        per, "doc_id", F.col("_is"), mat, score, threshold,
+        ("doc_a", "doc_b", "jaccard"),
     )
 
 

@@ -783,8 +783,10 @@ def degree_assortativity(
     """Degree assortativity coefficient (Newman 2002): the Pearson
     correlation of (deg(u), deg(v)) over the symmetrized edge list —
     one number saying whether hubs attach to hubs (> 0) or to leaves
-    (< 0). Returns a single row (m_edges, r). An edge with a null
-    endpoint is not an edge: it is dropped before the degree count.
+    (< 0). Returns a single row (m_edges, r); r is NULL when every
+    node has the same degree, as the correlation is then undefined. An
+    edge with a null endpoint is not an edge: it is dropped before the
+    degree count.
 
     All six sufficient statistics (M, sum j, sum k, sum jk, sum j^2,
     sum k^2) are exact integer aggregates; the coefficient combines
@@ -836,9 +838,11 @@ def degree_assortativity(
         F.col(c).cast("double") for c in ("m_edges", "sj", "sj2", "sjk")
     )
     den = m * sj2 - sj * sj  # the j and k variances are equal
+    # every node of equal degree makes den 0: r is NULL, not an error
     return stats.select(
         "m_edges",
-        F.round((m * sjk - sj * sj) / F.sqrt(den * den), 9).alias("r"),
+        F.round(F.try_divide(m * sjk - sj * sj, F.sqrt(den * den)), 9)
+        .alias("r"),
     )
 
 

@@ -4,8 +4,13 @@
   is broadcast; corpus scan stays partitioned, so the plan is a single
   pass over the corpus at any scale (no shuffle until the per-query
   top-k, which is a window over k*|queries| rows after local pruning).
+- block_pairs: the exact all-pairs scaffold — ids hash into 8 blocks,
+  one applyInPandas task per unordered block pair scores its pairs as
+  numpy matrices. cosine_pairs and dedup.dense_jaccard_pairs pass only
+  a payload-to-matrix function and a pair score.
 - cosine_pairs: all-pairs above a threshold (exact; quadratic — only
-  for modest corpora or verification).
+  for modest corpora or verification), scored with fold_dots and
+  fold_norms, the bit-exact per-dimension fp64 folds.
 - lsh_topk: the scale path — random-hyperplane LSH buckets candidates,
   exact cosine re-ranks within buckets. Hyperplanes are derived
   deterministically from md5 driver-side and inlined as literals, so
@@ -22,7 +27,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.functions.vector import (
@@ -75,122 +80,154 @@ def cosine_topk(
     )
 
 
+_BLOCKS = 8
+
+
+def fold_norms(m: np.ndarray) -> np.ndarray:
+    """Row L2 norms of the float64 matrix ``m``.
+
+    The squares accumulate one DIMENSION at a time, the left-to-right
+    fp64 addition order of the engines' aggregate fold, so every norm
+    is bit-identical to ``l2_norm`` over the same array."""
+    acc = np.zeros(m.shape[0])
+    for d in range(m.shape[1]):
+        acc += m[:, d] * m[:, d]
+    return np.sqrt(acc)
+
+
+def fold_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """The (rows of ``a``) x (rows of ``b``) matrix of row dot
+    products of two float64 matrices.
+
+    Accumulated one DIMENSION at a time (acc += outer(a[:, d],
+    b[:, d])): the same left-to-right fp64 addition order as the
+    engines' aggregate fold, so every entry is bit-identical to the
+    per-pair SQL ``dot``. A BLAS matmul sums in blocked order and
+    differs in the last bits."""
+    acc = np.zeros((a.shape[0], b.shape[0]))
+    for d in range(a.shape[1]):
+        acc += np.multiply.outer(a[:, d], b[:, d])
+    return acc
+
+
+def block_pairs(
+    frame: DataFrame,
+    id_col: str,
+    payload: Column,
+    mat,
+    score,
+    threshold: float,
+    out: tuple[str, str, str],
+) -> DataFrame:
+    """Exact all-pairs scoring: one row (a, b, score), named by ``out``,
+    for every id pair a < b of ``frame`` with score >= threshold.
+
+    Rows hash into 8 blocks on id, and every unordered block pair is
+    one applyInPandas task. A task stacks each side's ``payload``
+    values, ordered by id, into a matrix with ``mat`` and scores its
+    row pairs with ``score(L, R, ii, jj)``: a float64 array over the
+    pairs (L[ii], R[jj]), NaN where undefined (NaN is never kept).
+    ``score`` must be symmetric, as each pair is emitted as (min id,
+    max id) whichever side it came from. A pair belongs to exactly one
+    block pair, so output pairs are unique by construction. Each row
+    ships to B + 1 task sides (B = 8 blocks), an O(B * rows) shuffle;
+    the tasks are independent and numpy-bound."""
+    ida, idb, name = out
+    v = frame.select(
+        F.col(id_col).alias("_id"), payload.alias("_p")
+    ).withColumn("blk", F.pmod(F.col("_id"), F.lit(_BLOCKS)))
+    tasks = frame.sparkSession.createDataFrame(
+        [(i, j) for i in range(_BLOCKS) for j in range(i, _BLOCKS)],
+        "ba long, bb long",
+    )
+    left, right = (
+        tasks.join(v, v["blk"] == tasks[b]).select(
+            "ba", "bb", "_id", "_p", F.lit(s).alias("side")
+        )
+        for s, b in enumerate(("ba", "bb"))
+    )
+    t = float(threshold)
+    empty = pd.DataFrame(
+        {
+            ida: pd.Series(dtype="int64"),
+            idb: pd.Series(dtype="int64"),
+            name: pd.Series(dtype="float64"),
+        }
+    )
+
+    def side(pdf: pd.DataFrame, s: int):
+        part = pdf[pdf["side"] == s]
+        ids = part["_id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        return ids[order], mat(part["_p"].to_numpy()[order])
+
+    def _kern(key, pdf):
+        ba, bb = key
+        # a cross-block task can arrive one-sided when the other
+        # block holds no rows (tiny inputs) — no pairs to emit
+        if (pdf["side"] == 0).sum() == 0 or (pdf["side"] == 1).sum() == 0:
+            return empty
+        ids_l, ml = side(pdf, 0)
+        if ba == bb:
+            ids_r, mr = ids_l, ml
+            ii, jj = np.triu_indices(len(ids_l), k=1)
+        else:
+            ids_r, mr = side(pdf, 1)
+            ii, jj = np.meshgrid(
+                np.arange(len(ids_l)), np.arange(len(ids_r)), indexing="ij"
+            )
+            ii, jj = ii.ravel(), jj.ravel()
+        il, ir = ids_l[ii], ids_r[jj]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            s = score(ml, mr, ii, jj)
+        keep = s >= t
+        return pd.DataFrame(
+            {
+                ida: np.minimum(il, ir)[keep],
+                idb: np.maximum(il, ir)[keep],
+                name: s[keep],
+            }
+        )
+
+    return left.unionAll(right).groupBy("ba", "bb").applyInPandas(
+        _kern, f"{ida} long, {idb} long, {name} double"
+    )
+
+
 def cosine_pairs(
     vectors: DataFrame,
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_blocks: int = 8,
 ) -> DataFrame:
     """Exact near-duplicate pairs (id_a < id_b, cosine >= threshold).
 
     Deliberately exhaustive — the verifier / low-threshold sweep the
-    LSH path (cosine_pairs_lsh) cannot serve. Physical form: a
-    blocked OUTER-PRODUCT FOLD over float64 sub-matrices in
-    applyInPandas. Each unordered block pair materializes its two
-    (block_docs x dims) matrices and accumulates the pair dot matrix
-    one DIMENSION at a time (acc += outer(L[:,d], R[:,d])) — the
-    same left-to-right fp64 addition order as the engines' aggregate
-    fold, so every cosine is bit-identical to the per-pair SQL
-    expression (dot / (sqrt(dot_aa) * sqrt(dot_bb)), zero norms
-    dropped like try_divide's NULL). The crossJoin formulation this
-    replaces ran the fold per PAIR under a BroadcastNestedLoopJoin,
-    which breaks whole-stage codegen — 18.4 s at sf0.1 vs ~2 s here;
-    still O(n^2) work by design, now at vectorized-numpy cost/FLOP.
-    Pairs are unique by unordered-block-pair construction."""
-    import numpy as np
-    import pandas as pd
+    LSH path (cosine_pairs_lsh) cannot serve. Physical form: the
+    ``block_pairs`` scaffold over float64 sub-matrices, with dots and
+    norms from ``fold_dots``/``fold_norms``, so every cosine is
+    bit-identical to the per-pair SQL expression (dot / (sqrt(dot_aa)
+    * sqrt(dot_bb)), zero norms dropped like try_divide's NULL). The
+    crossJoin formulation this replaces ran the fold per PAIR under a
+    BroadcastNestedLoopJoin, which breaks whole-stage codegen — 18.4 s
+    at sf0.1 vs ~2 s here; still O(n^2) work by design, now at
+    vectorized-numpy cost/FLOP."""
 
-    v = vectors.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_e"),
-    ).withColumn("blk", F.pmod(F.col("_id"), F.lit(num_blocks)))
-    spark = vectors.sparkSession
-    tasks = spark.createDataFrame(
-        [(i, j) for i in range(num_blocks) for j in range(i, num_blocks)],
-        "ba long, bb long",
-    )
-    left = tasks.join(v, v["blk"] == tasks["ba"]).select(
-        "ba", "bb", "_id", "_e", F.lit(0).alias("side")
-    )
-    right = tasks.join(v, v["blk"] == tasks["bb"]).select(
-        "ba", "bb", "_id", "_e", F.lit(1).alias("side")
-    )
-    both = left.unionAll(right)
-    t = float(threshold)
+    def mat(rows) -> np.ndarray:
+        return np.stack([np.asarray(x, dtype=np.float64) for x in rows])
 
-    empty = pd.DataFrame(
-        {
-            "id_a": pd.Series(dtype="int64"),
-            "id_b": pd.Series(dtype="int64"),
-            "cosine": pd.Series(dtype="float64"),
-        }
-    )
+    def score(lm, rm, ii, jj):
+        den = fold_norms(lm)[ii] * fold_norms(rm)[jj]
+        return np.where(den > 0, fold_dots(lm, rm)[ii, jj] / den, np.nan)
 
-    def _kern(key, pdf):
-        ba, bb = key
-        # a cross-block task can arrive one-sided when the other
-        # block holds no vectors (tiny corpora) — no pairs to emit
-        if (pdf["side"] == 0).sum() == 0 or (pdf["side"] == 1).sum() == 0:
-            return empty
-
-        def mat(side: pd.DataFrame):
-            ids = side["_id"].to_numpy()
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            m = np.stack(
-                [
-                    np.asarray(x, dtype=np.float64)
-                    for x in side["_e"].to_numpy()[order]
-                ]
-            )
-            return ids, m
-
-        def fold_dot(lm, rm):
-            acc = np.zeros((lm.shape[0], rm.shape[0]))
-            for d in range(lm.shape[1]):
-                acc += np.multiply.outer(lm[:, d], rm[:, d])
-            return acc
-
-        def fold_norm(m):
-            acc = np.zeros(m.shape[0])
-            for d in range(m.shape[1]):
-                acc += m[:, d] * m[:, d]
-            return np.sqrt(acc)
-
-        if ba == bb:
-            ids, m = mat(pdf[pdf["side"] == 0])
-            dot_m = fold_dot(m, m)
-            nrm = fold_norm(m)
-            ii, jj = np.triu_indices(len(ids), k=1)
-            ia, ib = ids[ii], ids[jj]
-            dots, dena, denb = dot_m[ii, jj], nrm[ii], nrm[jj]
-        else:
-            ids_l, ml = mat(pdf[pdf["side"] == 0])
-            ids_r, mr = mat(pdf[pdf["side"] == 1])
-            dot_m = fold_dot(ml, mr)
-            nl, nr = fold_norm(ml), fold_norm(mr)
-            ii, jj = np.meshgrid(
-                np.arange(len(ids_l)),
-                np.arange(len(ids_r)),
-                indexing="ij",
-            )
-            ii, jj = ii.ravel(), jj.ravel()
-            il, ir = ids_l[ii], ids_r[jj]
-            ia = np.minimum(il, ir)
-            ib = np.maximum(il, ir)
-            dots, dena, denb = dot_m[ii, jj], nl[ii], nr[jj]
-        den = dena * denb
-        ok = den > 0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(ok, dots / den, np.nan)
-        keep = ok & (cos >= t)
-        return pd.DataFrame(
-            {"id_a": ia[keep], "id_b": ib[keep], "cosine": cos[keep]}
-        )
-
-    return both.groupBy("ba", "bb").applyInPandas(
-        _kern, "id_a long, id_b long, cosine double"
+    return block_pairs(
+        vectors,
+        id_col,
+        F.col(vec_col).cast("array<double>"),
+        mat,
+        score,
+        threshold,
+        ("id_a", "id_b", "cosine"),
     )
 
 
@@ -660,28 +697,28 @@ def semdedup_prune(
     the per-cluster work is bounded and the plan is one shuffle on
     cluster id + one groupBy, never an all-pairs crossJoin over the
     corpus. Assignment itself is a broadcast-literal projection
-    (operators/clustering.py).
+    (operators/clustering.py). The pair search is one gram kernel per
+    group: an applyInPandas task computes every in-group cosine with
+    ``fold_dots``/``fold_norms``, bit-identical to ``cosine_from_norms``.
 
-    **Per-cluster size cap (the r11 stress finding's twin):** with a
-    FIXED k, cluster occupancy is ~n/k, so intra-cluster candidates —
-    and wall time — grow QUADRATICALLY in corpus size (measured
-    137–166 s at 16× in docs/STRESS_r11.jsonl). Pass
-    ``max_cluster=M`` to pin occupancy: clusters over M are
-    subdivided by a deterministic hyperplane signature on the
-    embedding (the same md5-derived ±1 planes as ``lsh_bucket``),
-    using ceil(log2(size/M)) low bits per oversized cluster, and the
-    pair search runs within (cluster, sub-bucket) — candidate volume
-    grows linearly past M. The trade mirrors ``num_planes="auto"``:
-    a pair at cosine s lands in the same sub-bucket with probability
-    (1 - acos(s)/π)^planes, so near-twins (s ≥ 0.95, where semantic
-    dedup prunes) are kept with per-plane odds > 0.9, but pairs near
-    a LOOSE tau (~0.35) lose recall across sub-bucket boundaries —
-    the cap is a scale knob for near-dup taus, not for exhaustive
-    low-threshold sweeps (keep ``max_cluster=None`` there, or raise
-    M). Clusters at or under M are untouched: when no cluster
-    exceeds M the output is IDENTICAL to the uncapped form, which is
-    how the registered query keeps its exhaustive DuckDB oracle
-    exact at the tested SF while the cap engages at stress scale.
+    **``max_cluster`` is a per-cluster size cap (the r11 stress
+    finding's twin):** with a FIXED k, cluster occupancy is ~n/k, so
+    intra-cluster pairs — and wall time — grow QUADRATICALLY in
+    corpus size (measured 137–166 s at 16× in docs/STRESS_r11.jsonl).
+    Clusters over the cap M are subdivided by a deterministic
+    hyperplane signature on the embedding (the same md5-derived ±1
+    planes as ``lsh_bucket``), using ceil(log2(size/M)) low bits per
+    oversized cluster, and the pair search runs within (cluster,
+    sub-bucket) — pair volume grows linearly past M. The trade
+    mirrors ``num_planes="auto"``: a pair at cosine s lands in the
+    same sub-bucket with probability (1 - acos(s)/π)^planes, so
+    near-twins (s ≥ 0.95, where semantic dedup prunes) are kept with
+    per-plane odds > 0.9, but pairs near a LOOSE tau (~0.35) lose
+    recall across sub-bucket boundaries — the cap is a scale knob for
+    near-dup taus, not for exhaustive low-threshold sweeps. Clusters
+    at or under M are untouched, so when no cluster exceeds M the
+    output is IDENTICAL to the uncapped form. ``max_cluster=None``
+    splits no cluster.
     """
     from defimap_data_pipelines_spark.operators.clustering import kmeans_fit
 
@@ -691,17 +728,12 @@ def semdedup_prune(
         # every consumer — the k-means twin of the pair-frame cache
         assigned = kmeans_fit(emb, k=k, iters=iters, id_col=id_col,
                               vec_col=vec_col, keep_vec=True)
-    staged = assigned.select(
-        "cluster",
-        F.col("vec_id"),
-        F.col("e"),
-        l2_norm(F.col("e")).alias("_n"),
-    )
+    staged = assigned.select("cluster", "vec_id", "e")
     pair_keys = ["cluster"]
     if max_cluster is not None:
         # occupancy pinning: clusters over the cap get a deterministic
         # hyperplane sub-signature — ceil(log2(size/cap)) low bits of a
-        # 16-plane lsh_bucket — so per-(cluster, sub) candidate volume
+        # 16-plane lsh_bucket — so per-(cluster, sub) pair volume
         # stays ~cap² instead of growing quadratically with the corpus.
         # Clusters at/under the cap keep sub = 0 (exact, untouched).
         wide_planes = 16
@@ -739,126 +771,52 @@ def semdedup_prune(
             .drop("_wb", "_p", "_csz")
         )
         pair_keys = ["cluster", "sub"]
-    if max_cluster is not None:
-        # Dense-regime pair kernel (r13, r12 verdict item 3; the
-        # char_jaccard block-matmul precedent): the self-join form
-        # evaluates an INTERPRETED zip_with/aggregate fold per
-        # candidate pair (~7 us/pair measured — 4M in-cluster pairs at
-        # the 4x stress point cost ~26 s), while one BLAS gram matrix
-        # per (cluster, sub) group computes every pairwise dot as a
-        # fused multiply-add. The cap bounds group size, so per-task
-        # state is ~cap x dim; a pathological oversized bucket streams
-        # in 4096-row tiles (O(n^2) work either way; memory is linear
-        # in the group size: the n x dim matrix plus a 4096 x n block).
-        # Exactness: dots and norms accumulate one DIMENSION at a
-        # time (acc += outer(m[:, d], m[:, d])) — the same
-        # left-to-right fp64 addition order as the JVM aggregate
-        # fold, so every cosine is BIT-identical to the join path's
-        # cosine_from_norms (the cosine_pairs kernel's established
-        # technique). The kernel pre-filters with a 1e-7 GUARD BAND
-        # only — the exact round(cosine, 9) >= tau gate is re-applied
-        # Spark-side, so the kept-pair decision is the identical
-        # expression as before. Zero-norm vectors: 0/0 -> nan,
-        # nan >= guard is False — same drop as try_divide's NULL.
-        import numpy as np
-        import pandas as pd
+    # One gram matrix per (cluster[, sub]) group computes every
+    # pairwise dot as a fused multiply-add (r13; an interpreted
+    # zip_with/aggregate fold per candidate pair cost ~7 us/pair). A
+    # pathological oversized group streams in 4096-row tiles (O(n^2)
+    # work either way; memory is linear in the group size: the
+    # n x dim matrix plus a 4096 x n block). The kernel pre-filters
+    # with a 1e-7 GUARD BAND only — the exact round(cosine, 9) >= tau
+    # gate is applied Spark-side, the same expression as the oracle's.
+    # Zero-norm vectors: 0/0 -> nan, nan >= guard is False — the same
+    # drop as try_divide's NULL.
+    guard = float(tau) - 1e-7
+    tile = 4096
 
-        guard = float(tau) - 1e-7
-        tile = 4096
+    def _gram_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy()
+        m = np.asarray(pdf["e"].tolist(), dtype=np.float64)
+        norms = fold_norms(m)
+        parts = []
+        for i0 in range(0, len(ids), tile):
+            with np.errstate(divide="ignore", invalid="ignore"):
+                c = fold_dots(m[i0 : i0 + tile], m) / np.outer(
+                    norms[i0 : i0 + tile], norms
+                )
+            ii, jj = np.nonzero(c >= guard)  # nan -> False
+            up = i0 + ii < jj
+            ii, jj = ii[up], jj[up]
+            parts.append((ids[i0 + ii], ids[jj], c[ii, jj]))
+        a_id, b_id, cos = (np.concatenate(x) for x in zip(*parts))
+        # output ids keep the input columns' dtypes (int32 in, int32 out)
+        clu = pdf["cluster"].to_numpy()[:1].repeat(len(a_id))
+        return pd.DataFrame(
+            {"cluster": clu, "a_id": a_id, "b_id": b_id, "cosine": cos}
+        )
 
-        def _gram_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            n = len(pdf)
-            # output ids keep the input columns' dtypes (int32 in, int32 out)
-            cdt, vdt = pdf["cluster"].dtype, pdf["vec_id"].dtype
-            empty = pd.DataFrame(
-                {
-                    "cluster": pd.Series(dtype=cdt),
-                    "a_id": pd.Series(dtype=vdt),
-                    "b_id": pd.Series(dtype=vdt),
-                    "cosine": pd.Series(dtype="float64"),
-                }
-            )
-            if n < 2:
-                return empty
-            pdf = pdf.sort_values("vec_id")
-            ids = pdf["vec_id"].to_numpy()
-            m = np.asarray(pdf["e"].tolist(), dtype=np.float64)
-            # per-dimension accumulation == the JVM fold's addition
-            # order, bit for bit (see cosine_pairs' fold_norm)
-            nacc = np.zeros(m.shape[0])
-            for d in range(m.shape[1]):
-                nacc += m[:, d] * m[:, d]
-            norms = np.sqrt(nacc)
-            clu = pdf["cluster"].iloc[0]
-            out_a: list = []
-            out_b: list = []
-            out_c: list = []
-            for i0 in range(0, n, tile):
-                mi = m[i0 : i0 + tile]
-                g = np.zeros((mi.shape[0], m.shape[0]))
-                for d in range(m.shape[1]):
-                    g += np.multiply.outer(mi[:, d], m[:, d])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    c = g / np.outer(norms[i0 : i0 + tile], norms)
-                for r_ in range(mi.shape[0]):
-                    i = i0 + r_
-                    row = c[r_, i + 1 :]
-                    js = np.nonzero(row >= guard)[0]  # nan -> False
-                    if js.size:
-                        out_a.append(np.full(js.size, ids[i]))
-                        out_b.append(ids[i + 1 + js])
-                        out_c.append(row[js])
-            if not out_a:
-                return empty
-            return pd.DataFrame(
-                {
-                    "cluster": np.full(
-                        sum(x.size for x in out_a), clu, dtype=cdt
-                    ),
-                    "a_id": np.concatenate(out_a),
-                    "b_id": np.concatenate(out_b),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
-
-        ctype = staged.schema["cluster"].dataType.simpleString()
-        vtype = staged.schema["vec_id"].dataType.simpleString()
-        cand = (
-            staged.select(*pair_keys, "vec_id", "e")
-            .groupBy(*pair_keys)
-            .applyInPandas(
-                _gram_pairs,
-                f"cluster {ctype}, a_id {vtype}, "
-                f"b_id {vtype}, cosine double",
-            )
-            .filter(F.round(F.col("cosine"), 9) >= tau)
+    ctype = staged.schema["cluster"].dataType.simpleString()
+    vtype = staged.schema["vec_id"].dataType.simpleString()
+    cand = (
+        staged.select(*pair_keys, "vec_id", "e")
+        .groupBy(*pair_keys)
+        .applyInPandas(
+            _gram_pairs,
+            f"cluster {ctype}, a_id {vtype}, b_id {vtype}, cosine double",
         )
-    else:
-        a = staged.select(
-            *pair_keys,
-            F.col("vec_id").alias("a_id"),
-            F.col("e").alias("_av"),
-            F.col("_n").alias("_an"),
-        )
-        b = staged.select(
-            *pair_keys,
-            F.col("vec_id").alias("b_id"),
-            F.col("e").alias("_bv"),
-            F.col("_n").alias("_bn"),
-        )
-        cand = (
-            a.join(b, pair_keys)
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select(
-                "cluster",
-                "a_id",
-                "b_id",
-                cosine_from_norms(
-                    F.col("_av"), F.col("_bv"), F.col("_an"), F.col("_bn")
-                ).alias("cosine"),
-            )
-            .filter(F.round(F.col("cosine"), 9) >= tau)
-        )
+        .filter(F.round(F.col("cosine"), 9) >= tau)
+    )
     best = cand.groupBy("b_id", "cluster").agg(
         F.min(F.struct("a_id", "cosine")).alias("_m")
     )

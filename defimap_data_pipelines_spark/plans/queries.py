@@ -7020,18 +7020,18 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means the embedding space (the
     deterministic 2-round Lloyd fit, oracle-unrolled), then prune
     near-duplicates WITHIN clusters only — the quadratic pair search
-    is confined to cluster-local joins, never an all-pairs crossJoin
-    (operators/similarity.py::semdedup_prune). Returns the pruned
-    members with their keep-lowest-id duplicate root.
+    is confined to one gram kernel per cluster, never an all-pairs
+    crossJoin (operators/similarity.py::semdedup_prune). Returns the
+    pruned members with their keep-lowest-id duplicate root.
 
-    ``max_cluster=1024`` pins per-cluster candidate volume at stress
-    scale (r11 verdict item 4: 137–166 s at 16x under the quadratic
-    in-cluster contract): clusters over the cap are subdivided by a
-    deterministic hyperplane sub-signature. At the oracle SFs the
-    WHOLE corpus (500 vectors at sf0.001/sf0.01) is smaller than the
-    cap, so no cluster can exceed it under ANY skew — the capped
-    output is IDENTICAL to the uncapped form and the exhaustive
-    DuckDB oracle stays exact — pinned by
+    ``max_cluster=1024`` is only a size cap: it bounds per-cluster
+    pair volume at stress scale (r11 verdict item 4: 137–166 s at 16x
+    under the quadratic in-cluster contract) by subdividing clusters
+    over the cap with a deterministic hyperplane sub-signature. At the
+    oracle SFs the WHOLE corpus (500 vectors at sf0.001/sf0.01) is
+    smaller than the cap, so no cluster can exceed it under ANY skew —
+    the capped output is IDENTICAL to the uncapped form and the
+    exhaustive DuckDB oracle stays exact — pinned by
     tests/test_round12_semdedup_cap.py, which asserts both the
     sf-scale identity and the cap engaging on a synthetic oversized
     cluster."""

@@ -158,3 +158,31 @@ def test_cached_subtree_is_not_counted():
     line = audit.summary_line("q", PLAN)
     assert "exchanges= 4 " in line
     assert "codegen=5 " in line
+
+
+# a final plan whose broadcast side reuses the first side's shuffle, as
+# Spark 4 prints it: the reuse line names the ReusedExchange node AND
+# the Exchange it reuses
+REUSE_PLAN = """\
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   ResultQueryStage 3
+   +- *(4) BroadcastHashJoin [_u#9L], [_v#11L], Inner, BuildRight, false
+      :- *(4) HashAggregate(keys=[_n#27L], functions=[count(1)], output=[_u#9L, j#10L])
+      :  +- AQEShuffleRead coalesced
+      :     +- ShuffleQueryStage 0
+      :        +- Exchange hashpartitioning(_n#27L, 8), ENSURE_REQUIREMENTS, [plan_id=286]
+      :           +- *(1) Scan ExistingRDD[_n#27L]
+      +- BroadcastQueryStage 2
+         +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, true]),false), [plan_id=477]
+            +- *(3) HashAggregate(keys=[_n#17L], functions=[count(1)], output=[_v#11L, k#12L])
+               +- AQEShuffleRead coalesced
+                  +- ShuffleQueryStage 1
+                     +- ReusedExchange [_n#17L, count#58L], Exchange hashpartitioning(_n#27L, 8), ENSURE_REQUIREMENTS, [plan_id=286]
+"""
+
+
+def test_reused_exchange_counts_once():
+    line = _load().summary_line("q", REUSE_PLAN)
+    # the shuffle, the broadcast and the reuse: one each
+    assert "exchanges= 3 " in line

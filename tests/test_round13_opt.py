@@ -173,10 +173,43 @@ def test_fifo_matching_pin_released(spark, sf_dir):
     assert lazy.count() == n  # recomputes past its released pin
 
 
+def _semdedup_join_reference(assigned, tau: float):
+    """SemDeDup's pruned rows from a Spark self-join on cluster: every
+    in-cluster pair a_id < b_id scored with cosine_from_norms, kept at
+    round(cos, 9) >= tau, each b_id keeping its lowest-id root."""
+    from defimap_data_pipelines_spark.functions.vector import (
+        cosine_from_norms,
+        l2_norm,
+    )
+
+    s = assigned.select("cluster", "vec_id", "e",
+                        l2_norm(F.col("e")).alias("n"))
+    a, b = (
+        s.select("cluster", F.col("vec_id").alias(f"{x}_id"),
+                 F.col("e").alias(f"{x}v"), F.col("n").alias(f"{x}n"))
+        for x in "ab"
+    )
+    cos = cosine_from_norms(F.col("av"), F.col("bv"), F.col("an"),
+                            F.col("bn"))
+    return (
+        a.join(b, "cluster")
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("cluster", "a_id", "b_id", cos.alias("cosine"))
+        .filter(F.round(F.col("cosine"), 9) >= tau)
+        .groupBy("b_id", "cluster")
+        .agg(F.min(F.struct("a_id", "cosine")).alias("_m"))
+        .select(F.col("b_id").alias("vec_id"), "cluster",
+                F.col("_m.a_id").alias("dup_of"),
+                F.round(F.col("_m.cosine"), 6).alias("cosine"))
+    )
+
+
 def _semdedup_both_paths(spark, id_type: str):
-    """(join-path rows, gram-path rows, their dtypes) on planted twins."""
+    """(join-reference rows, gram-kernel rows, their dtypes) on
+    planted twins, both over one k-means fit."""
     import random
 
+    from defimap_data_pipelines_spark.operators.clustering import kmeans_fit
     from defimap_data_pipelines_spark.operators.similarity import (
         semdedup_prune,
     )
@@ -193,9 +226,9 @@ def _semdedup_both_paths(spark, id_type: str):
     emb = spark.createDataFrame(
         rows, f"vec_id {id_type}, embedding array<double>"
     )
-    kw = dict(k=4, iters=1, tau=0.35)
-    join = semdedup_prune(emb, max_cluster=None, **kw)
-    gram = semdedup_prune(emb, max_cluster=4096, dim=8, **kw)
+    assigned = kmeans_fit(emb, k=4, iters=1, keep_vec=True)
+    join = _semdedup_join_reference(assigned, tau=0.35)
+    gram = semdedup_prune(emb, tau=0.35, assigned=assigned)
     return (
         {tuple(r) for r in join.collect()},
         {tuple(r) for r in gram.collect()},
@@ -204,11 +237,9 @@ def _semdedup_both_paths(spark, id_type: str):
 
 
 def test_semdedup_gram_kernel_matches_join_path(spark):
-    """The r13 dense-regime gram kernel (max_cluster set) must emit
-    the IDENTICAL pruned rows — ids AND rounded cosines — as the
-    expression join path (max_cluster=None) when no cluster exceeds
-    the cap (the regime where the two formulations are defined to
-    coincide)."""
+    """The gram kernel must emit the IDENTICAL pruned rows — ids AND
+    rounded cosines — as an expression self-join on cluster scored
+    with cosine_from_norms."""
     via_join, via_gram, _ = _semdedup_both_paths(spark, "long")
     assert via_gram == via_join
     assert via_gram  # non-vacuous: the planted twins must be pruned
@@ -216,7 +247,7 @@ def test_semdedup_gram_kernel_matches_join_path(spark):
 
 def test_semdedup_gram_kernel_int32_ids_match_join_path(spark):
     """The gram kernel derives its id dtypes from the input columns:
-    int32 vec_ids give the join path's rows and types."""
+    int32 vec_ids give the join reference's rows and types."""
     via_join, via_gram, (join_t, gram_t) = _semdedup_both_paths(spark, "int")
     assert via_gram == via_join and via_gram
     assert gram_t == join_t and dict(gram_t)["vec_id"] == "int"

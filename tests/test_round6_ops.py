@@ -314,6 +314,18 @@ class TestAssortativity:
         )
         assert degree_assortativity(with_nulls).collect() == want
 
+    def test_equal_degrees_give_null_r(self, spark):
+        """Every node of one degree leaves both variances 0, so r is
+        NULL, as DuckDB evaluates the oracle expression; under ANSI
+        mode the plain division raised DIVIDE_BY_ZERO."""
+        from defimap_data_pipelines_spark.operators.graph import (
+            degree_assortativity,
+        )
+
+        for rows, m in (([(1, 2), (3, 4)], 4), ([(1, 1)], 2)):
+            e = spark.createDataFrame(rows, "u long, v long")
+            assert degree_assortativity(e).collect() == [(m, None)]
+
 
 class TestWinnowing:
     def test_matches_python_reimplementation(self, spark):

@@ -58,8 +58,11 @@ def summary_line(name: str, plan: str) -> str:
     scans = re.findall(r"ReadSchema: struct<([^\n>]*)", plan)
     widths = ",".join(str(len(s.split(","))) for s in scans) or "-"
     codegen_ids = set(re.findall(r"\*\((\d+)\)", plan))
+    # one per line that holds an exchange node: a reuse prints as
+    # "ReusedExchange [...], Exchange hashpartitioning(...)"
+    exchanges = sum("Exchange" in line for line in plan.splitlines())
     return (
-        f"{name:28s} exchanges={plan.count('Exchange'):2d} "
+        f"{name:28s} exchanges={exchanges:2d} "
         f"bhj={plan.count('BroadcastHashJoin')} "
         f"smj={plan.count('SortMergeJoin')} "
         f"codegen={len(codegen_ids)} "
