@@ -1,31 +1,38 @@
 """Risk metrics (aave_transform.py:348-521), computed natively with
 Spark aggregates/windows instead of driver-side pandas/numpy.
 
-Per strategy (``name``), over the GOTK of the last year
-(get_gotk_query(ds-365, ds) — aave_transform.py:446):
+``risk_metrics`` builds the pre_risk row per strategy (``name``) in one
+pass over its last 365 GOTK rows (get_gotk_query(ds-365, ds) —
+aave_transform.py:446): one tail, one running window, one aggregate.
 
 - sd: sample stdev of daily percent_change * sqrt(365)
   (statistics.stdev == stddev_samp; aave_transform.py:349-353)
-- annual_return: (mean_daily + 1)**365 - 1 (aave_transform.py:355-358;
-  note the exponent is the nominal day_period even when fewer rows)
-- sharpe: annual_return / sd (aave_transform.py:360-361)
-- alpha/beta/r_square: OLS y~x vs the benchmark series
-  (np.polyfit(x, y, 1) + manual residual R², aave_transform.py:363-382).
-  np.polyfit's least-squares line is computed here in closed form from
-  moment sums; R² uses the reference's residual formula (not corr²) so
-  degenerate inputs behave identically. The reference aligns the two
-  series positionally after tail(n) (SURVEY.md J2); since both are daily
-  grids the real key is the date, so we join on date — the semantic
-  translation called out in the survey.
+- sharpe: annual_return / sd with annual_return = (mean_daily + 1)**365
+  - 1 (aave_transform.py:355-361; nominal exponent even on fewer rows)
+- alpha/beta/r_square: OLS y~x vs the benchmark series (np.polyfit(x, y,
+  1) + manual residual R², aave_transform.py:363-382), in closed form
+  from six moment sums; R² uses the reference's residual formula (not
+  corr²) so degenerate inputs behave identically. The reference aligns
+  the series positionally after tail(n) (SURVEY.md J2); both are daily
+  grids, so the benchmark tail is left-joined on date instead. The sums
+  skip rows whose date the benchmark lacks (``x`` NULL): such a day has
+  no pair to regress, as under an inner join, while sd, sharpe and the
+  drawdown still see it. A strategy sharing no date with the benchmark
+  has no regression and so no row.
 - max_drawdown: relative drawdown mm (the reference's naming quirk —
-  the absolute dollar drawdown is computed then DISCARDED by the caller,
+  the dollar drawdown is computed then DISCARDED by the caller,
   aave_transform.py:403,458-464), peak/valley dates, duration in days.
-  Cumulative returns are quantized to integer micro-units so running
-  max/argmin are exact integer comparisons (deterministic tie-breaks:
-  first date, matching pandas idxmin/idxmax first-occurrence).
+  Daily dollar returns are quantized to integer micro-units, so the
+  running sum ``cum`` compares exactly. The running peak is
+  ``max(struct(cum, -unix_date(date), date, edi))``: the highest cum so
+  far, the earliest date among equal highs (its negated day number is
+  the largest), and that day's end_day_investment. The aggregate's
+  ``min(struct(cum - peak.cum, date, peak))`` is the deepest drawdown,
+  the earliest date among equal depths, and the peak that day saw. Both
+  tie-breaks are pandas' idxmin/idxmax first occurrence.
 
-All windows partition by ``name``: strategies parallelize, window state
-stays small (SURVEY.md §2.5 scale note).
+The window and the aggregate partition by ``name``: strategies
+parallelize, window state stays small (SURVEY.md §2.5 scale note).
 """
 
 from __future__ import annotations
@@ -34,7 +41,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.config import QUANT_SCALE
-from defimap_data_pipelines_spark.operators.cachereg import pin
 
 
 def _tail(df: DataFrame, n: int) -> DataFrame:
@@ -47,46 +53,51 @@ def _tail(df: DataFrame, n: int) -> DataFrame:
     )
 
 
-def sd_annualized(gotk: DataFrame, day_period: int = 365) -> DataFrame:
-    return (
-        _tail(gotk, day_period)
-        .groupBy("name")
-        .agg((F.stddev_samp("percent_change") * F.sqrt(F.lit(365.0))).alias("sd"))
-    )
-
-
-def annual_return(gotk: DataFrame, day_period: int = 365) -> DataFrame:
-    return (
-        _tail(gotk, day_period)
-        .groupBy("name")
-        .agg(
-            (
-                F.pow(F.avg("percent_change") + 1, F.lit(float(day_period))) - 1
-            ).alias("annual_return")
-        )
-    )
-
-
-def ols_alpha_beta_r2(
-    gotk: DataFrame, benchmark: DataFrame, day_period: int = 365
+def risk_metrics(
+    gotk: DataFrame, benchmark: DataFrame, return_1y: DataFrame, ds: str
 ) -> DataFrame:
-    """OLS of strategy pc (y) on benchmark pc (x), joined by date."""
-    y = _tail(gotk, day_period).select(
-        "name", "date", F.col("percent_change").alias("y")
+    """Assemble the pre_risk row per strategy (aave_transform.py:466-479).
+
+    ``benchmark`` is one GOTK series (capital_gotk or price_gotk output).
+    ``return_1y`` is a (name, return_1y) frame from the compounded-return
+    query with its ytd fallback (see pipelines.transform).
+    """
+    x = _tail(benchmark, 365).select("date", F.col("percent_change").alias("x"))
+    wcum = (
+        Window.partitionBy("name")
+        .orderBy("date")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    xb = benchmark
-    if "name" not in xb.columns:
-        xb = xb.withColumn("name", F.lit("_benchmark"))
-    x = _tail(xb, day_period).select("date", F.col("percent_change").alias("x"))
-    joined = y.join(F.broadcast(x), "date")
-    m = joined.groupBy("name").agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    ret = F.col("end_day_investment") - F.col("start_day_investment")
+    rq = F.round(ret * float(QUANT_SCALE)).cast("long")
+    peak = F.struct(
+        "cum", (-F.unix_date("date")).alias("neg_day"), "date", "end_day_investment"
     )
+    t = (
+        _tail(gotk, 365)
+        .join(F.broadcast(x), "date", "left")
+        .withColumn("cum", F.sum(rq).over(wcum))
+        .withColumn("pk", F.max(peak).over(wcum))
+    )
+    y = F.when(F.col("x").isNotNull(), F.col("percent_change"))
+    valley = F.struct((F.col("cum") - F.col("pk.cum")).alias("dd"), "date", "pk")
+    m = (
+        t.groupBy("name")
+        .agg(
+            F.stddev_samp("percent_change").alias("sd0"),
+            F.avg("percent_change").alias("mean"),
+            F.count("x").alias("n"),
+            F.sum("x").alias("sx"),
+            F.sum(y).alias("sy"),
+            F.sum(F.col("x") * y).alias("sxy"),
+            F.sum(F.col("x") * F.col("x")).alias("sxx"),
+            F.sum(y * y).alias("syy"),
+            F.min(valley).alias("v"),
+        )
+        .filter(F.col("n") > 0)
+    )
+    sd = F.col("sd0") * F.sqrt(F.lit(365.0))
+    annual_return = F.pow(F.col("mean") + 1, F.lit(365.0)) - 1
     beta = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
@@ -103,206 +114,21 @@ def ols_alpha_beta_r2(
     ss_tot = F.col("syy") - F.col("n") * (F.col("sy") / F.col("n")) * (
         F.col("sy") / F.col("n")
     )
-    return m.select(
+    mdd = (F.col("v.dd") / float(QUANT_SCALE)) / F.col("v.pk.end_day_investment")
+    return m.join(return_1y, "name", "left").select(
+        F.lit(ds).cast("date").alias("date"),
         "name",
+        sd.alias("sd"),
+        "return_1y",
+        (annual_return / sd).alias("sharpe"),
         alpha.alias("alpha"),
         beta.alias("beta"),
         (1 - ss_res / ss_tot).alias("r_square"),
+        mdd.alias("max_drawdown"),
+        F.col("v.pk.date").alias("peak_date"),
+        F.col("v.date").alias("valley_date"),
+        F.datediff("v.date", "v.pk.date").cast("long").alias("duration"),
     )
-
-
-def max_drawdown(gotk: DataFrame, day_period: int = 365) -> DataFrame:
-    """Relative max drawdown + peak/valley dates + duration, per name."""
-    w = Window.partitionBy("name").orderBy("date")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wall = Window.partitionBy("name")
-
-    df = _tail(gotk, day_period).select(
-        "name",
-        "date",
-        "end_day_investment",
-        (F.col("end_day_investment") - F.col("start_day_investment")).alias("ret"),
-    )
-    rq = F.round(F.col("ret") * float(QUANT_SCALE)).cast("long")
-    df = df.select("name", "date", "end_day_investment", rq.alias("rq"))
-    df = df.withColumn("cum", F.sum("rq").over(wcum))
-    df = df.withColumn("runmax", F.max("cum").over(wcum))
-    df = df.withColumn("dd", F.col("cum") - F.col("runmax"))
-    df = df.withColumn("min_dd", F.min("dd").over(wall))
-    df = df.withColumn(
-        "valley_date",
-        F.min(F.when(F.col("dd") == F.col("min_dd"), F.col("date"))).over(wall),
-    )
-    df = df.withColumn(
-        "max_cum_pre_valley",
-        F.max(
-            F.when(F.col("date") <= F.col("valley_date"), F.col("cum"))
-        ).over(wall),
-    )
-    df = df.withColumn(
-        "peak_date",
-        F.min(
-            F.when(
-                (F.col("date") <= F.col("valley_date"))
-                & (F.col("cum") == F.col("max_cum_pre_valley")),
-                F.col("date"),
-            )
-        ).over(wall),
-    )
-    df = df.withColumn(
-        "edi_at_peak",
-        F.min(
-            F.when(F.col("date") == F.col("peak_date"), F.col("end_day_investment"))
-        ).over(wall),
-    )
-    return (
-        df.groupBy("name")
-        .agg(
-            F.first("min_dd").alias("min_dd"),
-            F.first("peak_date").alias("peak_date"),
-            F.first("valley_date").alias("valley_date"),
-            F.first("edi_at_peak").alias("edi_at_peak"),
-        )
-        .select(
-            "name",
-            (
-                (F.col("min_dd") / float(QUANT_SCALE)) / F.col("edi_at_peak")
-            ).alias("max_drawdown"),
-            "peak_date",
-            "valley_date",
-            F.datediff(F.col("valley_date"), F.col("peak_date"))
-            .cast("long")
-            .alias("duration"),
-        )
-    )
-
-
-def risk_metrics(
-    gotk: DataFrame,
-    benchmark: DataFrame,
-    return_1y: DataFrame,
-    ds: str,
-    day_period: int = 365,
-) -> DataFrame:
-    """Assemble the pre_risk row per strategy (aave_transform.py:466-479).
-
-    ``return_1y`` is a (name, return_1y) frame from the compounded-return
-    query with its ytd fallback (see pipelines.transform).
-    """
-    # materialize the tail slice once: four aggregation families reuse it
-    # (|names| * day_period rows — tiny at any corpus scale)
-    gotk = pin(_tail(gotk, day_period).cache())
-    sd = sd_annualized(gotk, day_period)
-    ar = annual_return(gotk, day_period)
-    reg = ols_alpha_beta_r2(gotk, benchmark, day_period)
-    dd = max_drawdown(gotk, day_period)
-    out = (
-        sd.join(ar, "name")
-        .join(reg, "name")
-        .join(dd, "name")
-        .join(return_1y, "name", "left")
-    )
-    return out.select(
-        F.lit(ds).cast("date").alias("date"),
-        "name",
-        "sd",
-        "return_1y",
-        (F.col("annual_return") / F.col("sd")).alias("sharpe"),
-        "alpha",
-        "beta",
-        "r_square",
-        "max_drawdown",
-        "peak_date",
-        "valley_date",
-        "duration",
-    )
-
-
-def risk_metrics_pandas_replica(
-    gotk: DataFrame, benchmark: DataFrame, day_period: int = 365
-) -> DataFrame:
-    """Literal pandas replica of the reference risk math, run per
-    strategy group via applyInPandas (SURVEY.md §2.8: the bit-exact
-    fallback path the native implementation is validated against;
-    mirrors aave_transform.py:349-464).
-
-    Scale shape: one group per strategy, each a few hundred rows — the
-    Arrow exchange is tiny and groups parallelize; the native window
-    implementation (risk_metrics) remains the default path.
-    """
-    import math
-    import statistics
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("name", T.StringType()),
-            T.StructField("sd", T.DoubleType()),
-            T.StructField("annual_return", T.DoubleType()),
-            T.StructField("sharpe", T.DoubleType()),
-            T.StructField("alpha", T.DoubleType()),
-            T.StructField("beta", T.DoubleType()),
-            T.StructField("r_square", T.DoubleType()),
-            T.StructField("max_drawdown", T.DoubleType()),
-            T.StructField("peak_date", T.DateType()),
-            T.StructField("valley_date", T.DateType()),
-            T.StructField("duration", T.LongType()),
-        ]
-    )
-    bench_pdf = benchmark.select("date", "percent_change").toPandas()
-    bench_pdf = bench_pdf.sort_values("date").reset_index(drop=True)
-
-    def per_strategy(pdf: pd.DataFrame) -> pd.DataFrame:
-        df_gotk = pdf.sort_values("date").reset_index(drop=True)
-        name = df_gotk["name"].iloc[0]
-
-        # find_sd (aave_transform.py:349-353)
-        data = df_gotk["percent_change"].tail(day_period)
-        sd = statistics.stdev(data) * math.sqrt(365)
-        # find_average_t_return (:355-358)
-        day_return = df_gotk["percent_change"].tail(day_period).mean()
-        annual_return = ((day_return + 1) ** day_period) - 1
-        sharpe = annual_return / sd
-
-        # get_alpha_beta_r2 (:363-382) — positional tail alignment
-        dp = day_period
-        if len(bench_pdf.index) < dp or len(df_gotk.index) < dp:
-            dp = min(len(bench_pdf.index), len(df_gotk.index))
-        x = bench_pdf["percent_change"].tail(dp).reset_index(drop=True)
-        y = df_gotk["percent_change"].tail(dp).reset_index(drop=True)
-        theta = np.polyfit(x, y, 1)
-        pred = theta[1] + theta[0] * x
-        r_squared = 1 - (((pred - y) ** 2).sum() / ((y - y.mean()) ** 2).sum())
-
-        # find_max_drawdown (:384-403)
-        d = df_gotk.tail(day_period).reset_index(drop=True)
-        d["returns"] = d["end_day_investment"] - d["start_day_investment"]
-        d["cumulative_returns"] = d["returns"].cumsum()
-        d["running_max"] = d["cumulative_returns"].cummax()
-        d["drawdown"] = d["cumulative_returns"] - d["running_max"]
-        trough_date = d["date"][d["drawdown"].idxmin()]
-        sub = d[d["date"] <= trough_date]
-        peak_date = sub["date"][sub["cumulative_returns"].idxmax()]
-        mdd = d["drawdown"].min()
-        idx = int(d.index[d["date"] == peak_date].tolist()[0])
-        mm = mdd / d["end_day_investment"][idx]
-        duration = (trough_date - peak_date).days
-
-        return pd.DataFrame(
-            [
-                (
-                    name, sd, annual_return, sharpe,
-                    float(theta[1]), float(theta[0]), float(r_squared),
-                    mm, peak_date, trough_date, duration,
-                )
-            ],
-            columns=[f.name for f in out_schema.fields],
-        )
-
-    return gotk.groupBy("name").applyInPandas(per_strategy, out_schema)
 
 
 # --------------------------------------------------------------------------

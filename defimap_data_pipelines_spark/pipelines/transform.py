@@ -52,9 +52,11 @@ def run_transform(
 
     Returns {growth_of_10k, tvl, pre_total_return, pre_trailing_return,
     pre_risk} keyed like the reference's BigQuery datasets
-    (aave_transform.py:28-34). ``benchmark_price`` is the wbtc price
-    frame for the volatile-benchmark branch; stablecoin strategies
-    benchmark against the in-frame stable strategy's capital GOTK.
+    (aave_transform.py:28-34). When ``raw`` holds a stablecoin
+    strategy, every strategy is benchmarked against the capital GOTK of
+    the first stable name in sort order. Otherwise ``benchmark_price``,
+    a (date, name, price_usd) frame such as the wbtc price, is the
+    benchmark through its price GOTK; with neither, ValueError.
     """
     import datetime as dt
 
@@ -71,8 +73,8 @@ def run_transform(
     ).isoformat()
     gotk_1y = growth_of_10k(raw, last_year, ds)
 
-    # benchmark branch (aave_transform.py:41-90): stable names vs the
-    # designated stable strategy's capital GOTK, volatile vs price GOTK
+    # benchmark branch (aave_transform.py:41-90): one stable strategy's
+    # capital GOTK if there is one, else the price GOTK
     stable_names = [
         r.name
         for r in raw.select("name").distinct().collect()
@@ -81,7 +83,7 @@ def run_transform(
     if stable_names:
         bench = capital_gotk(
             raw.filter(
-                (F.col("name") == stable_names[0])
+                (F.col("name") == min(stable_names))
                 & F.col("date").between(F.lit(last_year), F.lit(ds))
             )
         )
@@ -89,10 +91,11 @@ def run_transform(
         bench = price_gotk(
             benchmark_price.filter(F.col("date").between(F.lit(last_year), F.lit(ds)))
         )
-    else:  # no stable strategy and no price frame: self-benchmark
-        bench = capital_gotk(
-            raw.filter(F.col("date").between(F.lit(last_year), F.lit(ds)))
-        ).drop("name").withColumn("name", F.lit("_self"))
+    else:
+        raise ValueError(
+            "run_transform needs a benchmark: raw has no stablecoin "
+            f"strategy (stablecoins={stablecoins}) and no benchmark_price"
+        )
 
     risk = risk_metrics(
         gotk_1y, bench, return_1y_with_fallback(trailing, ds), ds

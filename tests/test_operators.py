@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from defimap_data_pipelines_spark.operators.cleaning import interpolate_linear
 from defimap_data_pipelines_spark.operators.growth import growth_of_10k
-from defimap_data_pipelines_spark.operators.risk import max_drawdown
+from defimap_data_pipelines_spark.operators.risk import risk_metrics
 from defimap_data_pipelines_spark.operators.trailing import (
     trailing_returns,
     trailing_returns_naive,
@@ -131,12 +131,30 @@ def test_interpolate_matches_pandas(spark):
     assert np.allclose(got, want, equal_nan=True)
 
 
+def _urgent_bench(raw):
+    """The 1-URGENT series' capital GOTK: the risk tests' benchmark."""
+    from defimap_data_pipelines_spark.operators.growth import capital_gotk
+
+    return capital_gotk(
+        raw.filter(
+            (F.col("name") == "1-URGENT")
+            & F.col("date").between("2000-08-01", DS)
+        )
+    )
+
+
+def _risk(spark, gotk, bench):
+    """risk_metrics with no return_1y rows (the column comes out NULL)."""
+    no_r1y = spark.createDataFrame([], "name string, return_1y double")
+    return risk_metrics(gotk, bench, no_r1y, DS)
+
+
 def test_max_drawdown_matches_pandas_reference(spark, sf_dir):
     """A6: native drawdown == the reference's literal pandas algorithm
     (aave_transform.py:384-403), including the relative-mm quirk."""
     raw = orders_raw_series(spark, sf_dir)
     g = growth_of_10k(raw, "2000-08-01", DS)
-    got = {r.name: r for r in max_drawdown(g).collect()}
+    got = {r.name: r for r in _risk(spark, g, _urgent_bench(raw)).collect()}
     pdf = g.toPandas()
     for name, grp in pdf.groupby("name"):
         df_gotk = grp.sort_values("date").tail(365).reset_index(drop=True)
@@ -163,18 +181,10 @@ def test_max_drawdown_matches_pandas_reference(spark, sf_dir):
 
 def test_risk_regression_matches_numpy(spark, sf_dir):
     """A4: closed-form OLS == np.polyfit + residual R²."""
-    from defimap_data_pipelines_spark.operators.growth import capital_gotk
-    from defimap_data_pipelines_spark.operators.risk import ols_alpha_beta_r2
-
     raw = orders_raw_series(spark, sf_dir)
     g = growth_of_10k(raw, "2000-08-01", DS)
-    bench = capital_gotk(
-        raw.filter(
-            (F.col("name") == "1-URGENT")
-            & F.col("date").between("2000-08-01", DS)
-        )
-    )
-    got = {r.name: r for r in ols_alpha_beta_r2(g, bench).collect()}
+    bench = _urgent_bench(raw)
+    got = {r.name: r for r in _risk(spark, g, bench).collect()}
     gp = g.toPandas()
     bp = bench.toPandas().set_index("date")["percent_change"]
     for name, grp in gp.groupby("name"):
@@ -225,41 +235,160 @@ def test_return_1y_ytd_fallback(spark):
     assert out0.return_1y == pytest.approx(0.05, rel=1e-9)
 
 
+def risk_metrics_pandas_replica(gotk, benchmark):
+    """Literal pandas replica of the reference risk math, run per
+    strategy group via applyInPandas (SURVEY.md §2.8: the reference the
+    native risk_metrics is validated against; mirrors
+    aave_transform.py:349-464)."""
+    import math
+    import statistics
+
+    from pyspark.sql import types as T
+
+    day_period = 365
+    out_schema = T.StructType(
+        [
+            T.StructField("name", T.StringType()),
+            T.StructField("sd", T.DoubleType()),
+            T.StructField("annual_return", T.DoubleType()),
+            T.StructField("sharpe", T.DoubleType()),
+            T.StructField("alpha", T.DoubleType()),
+            T.StructField("beta", T.DoubleType()),
+            T.StructField("r_square", T.DoubleType()),
+            T.StructField("max_drawdown", T.DoubleType()),
+            T.StructField("peak_date", T.DateType()),
+            T.StructField("valley_date", T.DateType()),
+            T.StructField("duration", T.LongType()),
+        ]
+    )
+    bench_pdf = benchmark.select("date", "percent_change").toPandas()
+    bench_pdf = bench_pdf.sort_values("date").reset_index(drop=True)
+
+    def per_strategy(pdf: pd.DataFrame) -> pd.DataFrame:
+        df_gotk = pdf.sort_values("date").reset_index(drop=True)
+        name = df_gotk["name"].iloc[0]
+
+        # find_sd (aave_transform.py:349-353)
+        data = df_gotk["percent_change"].tail(day_period)
+        sd = statistics.stdev(data) * math.sqrt(365)
+        # find_average_t_return (:355-358)
+        day_return = df_gotk["percent_change"].tail(day_period).mean()
+        annual_return = ((day_return + 1) ** day_period) - 1
+        sharpe = annual_return / sd
+
+        # get_alpha_beta_r2 (:363-382) — positional tail alignment
+        dp = day_period
+        if len(bench_pdf.index) < dp or len(df_gotk.index) < dp:
+            dp = min(len(bench_pdf.index), len(df_gotk.index))
+        x = bench_pdf["percent_change"].tail(dp).reset_index(drop=True)
+        y = df_gotk["percent_change"].tail(dp).reset_index(drop=True)
+        theta = np.polyfit(x, y, 1)
+        pred = theta[1] + theta[0] * x
+        r_squared = 1 - (((pred - y) ** 2).sum() / ((y - y.mean()) ** 2).sum())
+
+        # find_max_drawdown (:384-403)
+        d = df_gotk.tail(day_period).reset_index(drop=True)
+        d["returns"] = d["end_day_investment"] - d["start_day_investment"]
+        d["cumulative_returns"] = d["returns"].cumsum()
+        d["running_max"] = d["cumulative_returns"].cummax()
+        d["drawdown"] = d["cumulative_returns"] - d["running_max"]
+        trough_date = d["date"][d["drawdown"].idxmin()]
+        sub = d[d["date"] <= trough_date]
+        peak_date = sub["date"][sub["cumulative_returns"].idxmax()]
+        mdd = d["drawdown"].min()
+        idx = int(d.index[d["date"] == peak_date].tolist()[0])
+        mm = mdd / d["end_day_investment"][idx]
+        duration = (trough_date - peak_date).days
+
+        return pd.DataFrame(
+            [
+                (
+                    name, sd, annual_return, sharpe,
+                    float(theta[1]), float(theta[0]), float(r_squared),
+                    mm, peak_date, trough_date, duration,
+                )
+            ],
+            columns=[f.name for f in out_schema.fields],
+        )
+
+    return gotk.groupBy("name").applyInPandas(per_strategy, out_schema)
+
+
 def test_native_risk_equals_pandas_replica(spark, sf_dir):
-    """The native window/aggregate risk path must agree with the
-    applyInPandas literal-reference replica (§2.8 dual-implementation).
+    """The native risk_metrics must agree with the applyInPandas
+    literal-reference replica (§2.8 dual-implementation).
 
     Note the replica aligns regression series POSITIONALLY (the
     reference's tail+reset_index); the native path joins by date. On
-    this data the grids differ per name, so alpha/beta/r² are compared
-    only for the benchmark strategy itself (identical grid)."""
-    from defimap_data_pipelines_spark.operators.growth import capital_gotk
-    from defimap_data_pipelines_spark.operators.risk import (
-        max_drawdown,
-        risk_metrics_pandas_replica,
-        sd_annualized,
-        annual_return,
-    )
-
+    this data the grids differ per name, so the regression is not
+    compared here (test_risk_regression_matches_numpy covers it)."""
     raw = orders_raw_series(spark, sf_dir)
     g = growth_of_10k(raw, "2000-08-01", DS)
-    bench = capital_gotk(
-        raw.filter(
-            (F.col("name") == "1-URGENT")
-            & F.col("date").between("2000-08-01", DS)
-        )
-    )
+    bench = _urgent_bench(raw)
     replica = {r.name: r for r in risk_metrics_pandas_replica(g, bench).collect()}
-    sd = {r.name: r.sd for r in sd_annualized(g).collect()}
-    ar = {r.name: r.annual_return for r in annual_return(g).collect()}
-    dd = {r.name: r for r in max_drawdown(g).collect()}
+    got = {r.name: r for r in _risk(spark, g, bench).collect()}
     for name, rep in replica.items():
-        assert sd[name] == pytest.approx(rep.sd, rel=1e-9)
-        assert ar[name] == pytest.approx(rep.annual_return, rel=1e-9)
-        assert dd[name].max_drawdown == pytest.approx(rep.max_drawdown, rel=1e-6)
-        assert dd[name].peak_date == rep.peak_date
-        assert dd[name].valley_date == rep.valley_date
-        assert dd[name].duration == rep.duration
+        assert got[name].sd == pytest.approx(rep.sd, rel=1e-9)
+        assert got[name].sharpe == pytest.approx(rep.sharpe, rel=1e-9)
+        assert got[name].max_drawdown == pytest.approx(rep.max_drawdown, rel=1e-6)
+        assert got[name].peak_date == rep.peak_date
+        assert got[name].valley_date == rep.valley_date
+        assert got[name].duration == rep.duration
+
+
+def _hand_gotk(name, edis, start=dt.date(2023, 1, 1)):
+    """GOTK rows for one name from its end-day investments: the start
+    day is the previous end day (10000 on day one)."""
+    rows, sdi = [], 10000.0
+    for i, edi in enumerate(edis):
+        rows.append((start + dt.timedelta(days=i), name, sdi, edi, edi / sdi - 1))
+        sdi = edi
+    return rows
+
+
+def test_risk_drawdown_and_regression_edge_cases(spark):
+    """Hand-built series pin the drawdown tie-breaks and the regression
+    join: a curve that only rises has no drawdown (peak = valley = first
+    day); of two equal troughs the earliest is the valley; of two equal
+    peaks before the trough the earliest is the peak; a name with no
+    date in common with the benchmark has no row. Everything else
+    matches the pandas replica, whose positional regression equals the
+    date join here because each series covers the benchmark's days."""
+    cols = [
+        "date", "name", "start_day_investment", "end_day_investment",
+        "percent_change",
+    ]
+    day0 = dt.date(2023, 1, 1)
+    series = {
+        "rise": [10010.0, 10030.0, 10035.0, 10070.0, 10071.0, 10100.0],
+        "two_troughs": [10010.0, 10100.0, 10050.0, 10080.0, 10050.0, 10060.0],
+        "two_peaks": [10010.0, 10100.0, 10050.0, 10100.0, 10020.0, 10030.0],
+    }
+    rows = [r for name, edis in series.items() for r in _hand_gotk(name, edis)]
+    lonely = _hand_gotk("lonely", [10010.0, 9990.0, 10020.0], day0 + dt.timedelta(days=100))
+    bench_rows = _hand_gotk("bench", [10020.0, 9990.0, 10050.0, 10040.0, 10090.0, 10060.0])
+    gotk = spark.createDataFrame(pd.DataFrame(rows + lonely, columns=cols))
+    bench = spark.createDataFrame(pd.DataFrame(bench_rows, columns=cols))
+
+    got = {r.name: r for r in _risk(spark, gotk, bench).collect()}
+    assert set(got) == set(series)
+    day = [day0 + dt.timedelta(days=i) for i in range(6)]
+    assert got["rise"].max_drawdown == 0.0
+    assert (got["rise"].peak_date, got["rise"].valley_date) == (day[0], day[0])
+    assert got["rise"].duration == 0
+    assert (got["two_troughs"].peak_date, got["two_troughs"].valley_date) == (day[1], day[2])
+    assert (got["two_peaks"].peak_date, got["two_peaks"].valley_date) == (day[1], day[4])
+
+    replica = risk_metrics_pandas_replica(
+        gotk.filter(F.col("name") != "lonely"), bench
+    ).collect()
+    for rep in replica:
+        r = got[rep.name]
+        for col in ("sd", "sharpe", "alpha", "beta", "r_square", "max_drawdown"):
+            assert getattr(r, col) == pytest.approx(getattr(rep, col), rel=1e-9, abs=1e-12), col
+        assert (r.peak_date, r.valley_date, r.duration) == (
+            rep.peak_date, rep.valley_date, rep.duration,
+        )
 
 
 def test_udtf_sentences_match_jvm_split(spark, sf_dir):

@@ -97,16 +97,76 @@ def test_transform_end_to_end(spark, bronze):
 
 
 def test_run_transform_pins_its_caches(spark):
-    """The raw scan, the trailing-returns base and the risk tail that
-    run_transform caches live in the session's store, so a long-lived
-    session's release() frees them instead of leaking three frames per
-    daily run."""
+    """The raw scan and the trailing-returns base that run_transform
+    caches live in the session's store, so a long-lived session's
+    release() frees them instead of leaking two frames per daily run.
+    (risk_metrics caches nothing: it is one pass over its tail.)"""
     s2 = spark.newSession()
     raw = sample_chain_state(
         date_range_frame(s2, "2023-01-01", "2023-06-30", ["aave_usdc", "aave_wbtc"])
     )
     run_transform(raw, ds="2023-06-30", start_date="2023-01-01")
-    assert release(s2) == 3
+    assert release(s2) == 2
+
+
+@pytest.fixture(scope="module")
+def volatile_raw(spark):
+    dates = date_range_frame(
+        spark, "2023-01-01", "2023-06-30", ["aave_wbtc", "aave_weth"]
+    )
+    return sample_chain_state(dates).cache()
+
+
+def test_run_transform_without_benchmark_raises(volatile_raw):
+    """With no stablecoin strategy and no benchmark_price there is no
+    benchmark series; run_transform refuses instead of regressing each
+    strategy on a mix of every strategy's capital GOTK."""
+    with pytest.raises(ValueError, match="benchmark"):
+        run_transform(volatile_raw, ds="2023-06-30", start_date="2023-01-01")
+
+
+def test_run_transform_benchmark_price_branch(spark, volatile_raw):
+    """Volatile-only strategies regress on benchmark_price's price GOTK,
+    joined by date (aave_transform.py:63-89)."""
+    import datetime as dt
+    import math
+
+    import numpy as np
+
+    from defimap_data_pipelines_spark.operators.growth import (
+        growth_of_10k,
+        price_gotk,
+    )
+
+    ds, last_year = "2023-06-30", "2022-06-30"
+    day0 = dt.date(2023, 1, 1)
+    price = spark.createDataFrame(
+        [
+            (day0 + dt.timedelta(days=i), "wbtc", 20000.0 * (1 + 0.05 * math.sin(i)))
+            for i in range(181)
+        ],
+        "date date, name string, price_usd double",
+    )
+    risk = run_transform(
+        volatile_raw, ds=ds, start_date="2023-01-01", benchmark_price=price
+    )["pre_risk"].collect()
+    assert sorted(r.name for r in risk) == ["aave_wbtc", "aave_weth"]
+
+    x = (
+        price_gotk(price.filter(F.col("date").between(last_year, ds)))
+        .toPandas()
+        .set_index("date")["percent_change"]
+        .rename("x")
+    )
+    gotk = growth_of_10k(volatile_raw, last_year, ds).toPandas()
+    for row in risk:
+        grp = gotk[gotk["name"] == row.name].join(x, on="date", how="inner")
+        xs, ys = grp["x"].to_numpy(), grp["percent_change"].to_numpy()
+        beta, alpha = np.polyfit(xs, ys, 1)
+        r2 = 1 - np.sum((alpha + beta * xs - ys) ** 2) / np.sum((ys - ys.mean()) ** 2)
+        assert row.beta == pytest.approx(beta, rel=1e-6)
+        assert row.alpha == pytest.approx(alpha, rel=1e-6, abs=1e-12)
+        assert row.r_square == pytest.approx(r2, rel=1e-6)
 
 
 def test_load_stamps_strategy_id(spark, bronze):
